@@ -8,8 +8,10 @@
 install:
 	@echo "dependencies are preinstalled (pyspark, pyarrow, pandas, numpy, duckdb, pytest, hypothesis)"
 
+# The tier-1 gate, verbatim (ROADMAP.md "Tier-1 verify").
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # Emulates the driver's CORRECTNESS gate: first-50-query window.
 check:

@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_seedling_spark.session import build_session  # noqa: E402
+from data_seedling_spark.session import build_session, query_scope  # noqa: E402
 
 #: Headline set: one per major operator family; extended as phases land.
 HEADLINE = [
@@ -304,7 +304,6 @@ def calibration_run(spark) -> float:
     No parquet, no catalog code — only the host moves this number."""
     from pyspark.sql import functions as F
 
-    spark.catalog.clearCache()
     t0 = time.time()
     (
         spark.range(0, 12_000_000, 1, 32)
@@ -334,7 +333,6 @@ def calibration_text_run(spark) -> float:
     too."""
     from pyspark.sql import functions as F
 
-    spark.catalog.clearCache()
     t0 = time.time()
     words = [
         F.md5(F.concat(F.col("id").cast("string"), F.lit(f"-{i}")))
@@ -380,13 +378,13 @@ def drift_ratio(calibration_sec: float, baseline_sec: float | None) -> float:
 
 def run_one(fn, spark, sf_dir: str) -> float:
     # Queries persist() shared subtrees and hand cache ownership to the
-    # caller; dropping the cache between timed runs keeps measurements
-    # independent (no cross-query eviction thrash, no free rides on a
-    # previous run's cache) and bounds bench memory.
-    spark.catalog.clearCache()
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+    # caller; the scope releases them (and conf, temp dirs) after the
+    # timed action, so runs stay independent and bench memory bounded.
+    with query_scope(spark):
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.time() - t0
+    return wall
 
 
 def _stage_metrics(spark) -> dict:

@@ -27,6 +27,7 @@ from typing import Protocol, runtime_checkable
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.ledger import VersionedTable
+from .session import sql_conf
 
 
 @runtime_checkable
@@ -338,21 +339,10 @@ class IcebergBackend:
             writer.createOrReplace()
         elif kwargs.get("merge_schema"):
             # check-ordering is a SESSION conf on a shared SparkSession:
-            # relax it only for this append and restore the caller's
-            # value (unset if it was unset) on every exit path.
+            # relax it only for this append.
             key = f"spark.sql.catalog.{self._catalog}.check-ordering"
-            try:
-                prior = self.spark.conf.get(key)
-            except Exception:
-                prior = None
-            self.spark.conf.set(key, "false")
-            try:
+            with sql_conf(self.spark, **{key: "false"}):
                 writer.option("merge-schema", "true").append()
-            finally:
-                if prior is None:
-                    self.spark.conf.unset(key)
-                else:
-                    self.spark.conf.set(key, prior)
         else:
             writer.append()
         return self.latest_version()

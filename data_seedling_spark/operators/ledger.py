@@ -23,6 +23,14 @@ Layout::
       v00000/*.parquet      # rows written by that commit
       v00003.changes/       # explicit change rows (merge commits only)
 
+The snapshot rule is also read from outside the engine: the benchmark's
+correctness twin (``perfbench/workloads.py`` ``live_commits`` /
+``read_live``) rebuilds a snapshot as the last non-append commit's dir
+plus every later append, straight from ``_ledger.json``. A layout that
+adds files a read must subtract (key files, tombstones) makes that twin
+count deleted rows, so such a change lands only after the benchmark's
+reader learns the new rule.
+
 Scale note: this substrate is the *local test double* for Delta/Iceberg
 — the protocol (watermark + change-feed read + idempotent merge) is
 what the engine owns; on a real lakehouse the same call sites bind to

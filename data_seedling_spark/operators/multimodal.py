@@ -1862,61 +1862,3 @@ def image_hash_bits(px) -> tuple[int, int, int, int]:
     dhi, dlo = pack(dbits)
     return ahi, alo, dhi, dlo
 
-
-IMAGE_HASH_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("ahash_hi", T.LongType()),
-        T.StructField("ahash_lo", T.LongType()),
-        T.StructField("dhash_hi", T.LongType()),
-        T.StructField("dhash_lo", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
-
-
-def hash_images(
-    df: DataFrame, payload_col: str = "payload", out_col: str = "phash"
-) -> DataFrame:
-    """REAL perceptual-hash extraction over ``mapInPandas``: decode
-    the payload with the format-sniffed codec, then
-    :func:`image_hash_bits`. Per-row error isolation (ok=False), same
-    Arrow-batched plumbing as ``decode_images`` — O(pixels) per row,
-    no shuffle, so it rides along any 100 TB scan."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, IMAGE_HASH_SCHEMA)]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for b in pdf[payload_col]:
-                if b is None:
-                    out.append(None)
-                    continue
-                try:
-                    px = decode_image_pixels(bytes(b))
-                    ahi, alo, dhi, dlo = image_hash_bits(px)
-                    out.append(
-                        {
-                            "width": int(px.shape[1]),
-                            "height": int(px.shape[0]),
-                            "ahash_hi": ahi, "ahash_lo": alo,
-                            "dhash_hi": dhi, "dhash_lo": dlo,
-                            "ok": True,
-                        }
-                    )
-                except Exception:
-                    out.append(
-                        {
-                            "width": None, "height": None,
-                            "ahash_hi": None, "ahash_lo": None,
-                            "dhash_hi": None, "dhash_lo": None,
-                            "ok": False,
-                        }
-                    )
-            pdf[out_col] = out
-            yield pdf
-
-    return df.mapInPandas(run, out_schema)

@@ -27,12 +27,6 @@ from pyspark.sql import functions as F
 MetricExporter = Callable[[str, float, dict[str, str]], None]
 
 
-def console_exporter(name: str, value: float, tags: dict[str, str]) -> None:
-    """Minimal reference exporter: one parseable line per measurement."""
-    tag_str = ",".join(f"{k}={v}" for k, v in sorted(tags.items()))
-    print(f"metric {name}={value} {tag_str}")
-
-
 @dataclass
 class MetricsLog:
     """Driver-side tagged-sum accumulator (reference ``SumAggregation``)

@@ -30,19 +30,20 @@ Rank error: level-``l`` compaction perturbs any rank query by at most
 asserted in ``tests/test_sketch.py``.
 
 Reference scope: the reference engine ships no sketch operator
-(SURVEY §2 gap list / docs/ROADMAP.md:427-431); this is the
-training-pipeline extension (percentile feeds for quality filtering at
-100 TB, where exact global sort is off the table).
+(SURVEY §2 gap list); this is the training-pipeline extension
+(percentile feeds for quality filtering at 100 TB, where exact global
+sort is off the table).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import lru_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from ..session import sql_conf
 
 
 def _md5_long(col):
@@ -51,7 +52,6 @@ def _md5_long(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
-@contextmanager
 def _carried_partitioning(spark):
     """AQE off for a compaction LOOP (restored on exit): with AQE on,
     ``localCheckpoint`` captures an adaptive plan whose output
@@ -64,12 +64,7 @@ def _carried_partitioning(spark):
     loop-local and shrink geometrically, so none of AQE's runtime
     rescue (coalescing, skew splits) is load-bearing inside the loop;
     everything outside runs with the session's AQE untouched."""
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    return sql_conf(spark, **{"spark.sql.adaptive.enabled": "false"})
 
 
 def kll_bucketed(

@@ -23,10 +23,6 @@ STOPWORDS = {
 TOKEN_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
-def _count_in(words, vocab: tuple[str, ...]):
-    return F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in vocab])))
-
-
 def _hits(words, vocab: tuple[str, ...]):
     """Total (with repeats) occurrences of vocab words."""
     return F.size(F.filter(words, lambda w: w.isin(*vocab)))
@@ -811,20 +807,6 @@ def strip_html(col, keep_ratio_scale: int = 6):
             "kept_ratio"
         ),
     )
-
-
-def strip_html_sql(expr: str) -> str:
-    """DuckDB twin of :func:`strip_html`'s cleaning program (returns
-    the cleaned-text SQL expression; compute kept_ratio at the call
-    site from the same pieces)."""
-    x = expr
-    for tag in HTML_BOILERPLATE_TAGS:
-        x = f"regexp_replace({x}, '<{tag}[^>]*>.*?</{tag}>', ' ', 'g')"
-    x = f"regexp_replace({x}, '<[^>]*>', ' ', 'g')"
-    for ent, rep in HTML_ENTITIES:
-        rep_sql = rep.replace("'", "''")
-        x = f"replace({x}, '{ent}', '{rep_sql}')"
-    return f"trim(regexp_replace({x}, '  *', ' ', 'g'))"
 
 
 def compression_quality(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

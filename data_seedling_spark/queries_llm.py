@@ -1663,15 +1663,12 @@ def pit_join_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scd import scd2_from_changes
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    import tempfile
-
     from .operators.ledger import VersionedTable
+    from .session import sql_conf, workspace
 
-    base = tempfile.mkdtemp(prefix="pit_scd2_")
+    base = workspace("pit_scd2_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **{"spark.sql.shuffle.partitions": 8}):
         key = F.col("o_orderkey")
         source.write(orders.where(key % 4 == 1), mode="overwrite")
         source.write(orders.where(key % 4 == 2), mode="append")
@@ -1698,8 +1695,6 @@ def pit_join_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "o_orderkey", "o_totalprice", F.lit(as_of).cast("long").alias("as_of_version")
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(

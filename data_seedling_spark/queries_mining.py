@@ -20,7 +20,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .queries import query
+from .session import sql_conf
 from .tables import load_table
+
+# The graph loops' per-round localCheckpoint materializes at the
+# configured shuffle width and AQE coalescing does not survive the
+# checkpoint: clamp the width for the node-sized label frames.
+_GRAPH_SHUFFLE = {"spark.sql.shuffle.partitions": 32}
 
 
 @query(
@@ -962,21 +968,13 @@ def label_propagation_communities_q(spark: SparkSession, sf_dir: str) -> DataFra
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li).select("u", "v").distinct()
-    # The per-round localCheckpoint materializes at the configured
-    # shuffle width and AQE coalescing does not survive the checkpoint
-    # — clamp width for the node-sized label frames (same pattern as
-    # the scd2/streaming pipeline queries).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with sql_conf(spark, **_GRAPH_SHUFFLE):
         labels = label_propagation_communities(edges, src="u", dst="v", rounds=2)
         return labels.groupBy(F.col("label").alias("community")).agg(
             F.count("*").alias("n_members"),
             F.min("node").alias("min_node"),
             F.max("node").alias("max_node"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _pagerank_oracle(rounds: int = 3) -> str:
@@ -1029,13 +1027,9 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_pairs(li).select("u", "v").distinct()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with sql_conf(spark, **_GRAPH_SHUFFLE):
         ranks = pagerank_integer(edges, rounds=3)
         return ranks.select("node", F.col("r").alias("rank_micro"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _pagerank_weighted_oracle(rounds: int = 3) -> str:
@@ -1092,13 +1086,9 @@ def pagerank_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_pairs(li).groupBy("u", "v").agg(
         F.count("*").alias("w")
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with sql_conf(spark, **_GRAPH_SHUFFLE):
         ranks = pagerank_weighted(edges, rounds=3)
         return ranks.select("node", F.col("r").alias("rank_micro"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _pagerank_personalized_oracle(rounds: int = 3) -> str:
@@ -1165,13 +1155,9 @@ def pagerank_personalized_copurchase(
         edges.select(F.col("v").alias("node"))
     ).distinct()
     seeds = nodes.where(F.col("node") % 50 == 0)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
+    with sql_conf(spark, **_GRAPH_SHUFFLE):
         ranks = pagerank_personalized(edges, seeds, rounds=3)
         return ranks.select("node", F.col("r").alias("rank_micro"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _als_solve_sql(pre: str, lam: str = "0.25") -> str:

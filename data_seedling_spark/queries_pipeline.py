@@ -13,14 +13,21 @@ import os
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.ledger import ConstraintViolationError, VersionedTable
 from .queries import query
+from .session import sql_conf, workspace
 from .tables import load_table
 
 _ORDER_COLS = ("o_orderkey", "o_orderstatus", "o_totalprice")
+# Small-data protocol demos cap commit files and run their eager work
+# at a narrow shuffle width, so the many tiny jobs don't pay
+# 200-partition overhead under a default session; the returned lazy
+# frame plans under the session's own value.
+_PROTOCOL_SHUFFLE = {"spark.sql.shuffle.partitions": 8}
 
 
 @query(
@@ -58,19 +65,12 @@ def cdc_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (overwrite-as-delete+insert included via v2's merge commit).
     """
     orders = load_table(spark, sf_dir, "orders").select(*_ORDER_COLS)
-    base = tempfile.mkdtemp(prefix="cdc_roundtrip_")
-    # Small-data protocol demo: cap commit files and shuffle width so
-    # the many tiny jobs don't pay 200-partition overhead under a
-    # default session. (Data tables at scale keep full parallelism.)
+    base = workspace("cdc_roundtrip_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     target = VersionedTable(spark, f"{base}/dst", write_partitions=4)
     state = VersionedTable(spark, f"{base}/state", write_partitions=1)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         return _run_roundtrip(spark, orders, source, target, state)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _run_roundtrip(spark, orders, source, target, state) -> DataFrame:
@@ -248,14 +248,12 @@ def incremental_pseudonymisation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.incremental import run_incremental_activity
 
     customer = load_table(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="inc_pseudo_")
+    base = workspace("inc_pseudo_")
     bronze = VersionedTable(spark, f"{base}/bronze", write_partitions=4)
     silver = VersionedTable(spark, f"{base}/silver", write_partitions=4)
     state = VersionedTable(spark, f"{base}/state", write_partitions=1)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         bronze.write(customer.where(F.col("c_custkey") % 2 == 0), mode="overwrite")
         run_incremental_activity(
             spark, bronze, silver, state,
@@ -264,8 +262,6 @@ def incremental_pseudonymisation(spark: SparkSession, sf_dir: str) -> DataFrame:
             transform=lambda df: pseudo_transform(df, TABLE_CONFIG["customer"]),
         )
         return silver.read()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -334,15 +330,13 @@ def streaming_pseudonymise_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
         stream_merge_into,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_pseudo_")
+    base = workspace("stream_pseudo_")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = read_events_stream(spark, sf_dir, schema, glob="events.parquet")
     transformed = pseudo_transform(stream, TABLE_CONFIG["events"])
     target = VersionedTable(spark, f"{base}/silver", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         q = stream_merge_into(
             transformed, target, primary_keys=["event_id"],
             checkpoint_dir=f"{base}/ck",
@@ -350,8 +344,6 @@ def streaming_pseudonymise_pipeline(spark: SparkSession, sf_dir: str) -> DataFra
         q.awaitTermination(300)
         require_stream_progress(q, os.path.join(sf_dir, "events.parquet"))
         return target.read()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -580,12 +572,10 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     from .operators.dedup import exact_dedup
 
-    base = tempfile.mkdtemp(prefix="inc_dedup_")
+    base = workspace("inc_dedup_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     target = VersionedTable(spark, f"{base}/dst", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("doc_id")
         source.write(documents.where(key % 3 == 0), mode="overwrite")
         # run 1: seed the target with the deduped initial snapshot
@@ -606,8 +596,6 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).join(seen, "_h", "left_anti").drop("_h")
         target.write(fresh, mode="append")
         return target.read().select("doc_id", "lang")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -704,7 +692,7 @@ def minhash_lsh_index_maintenance(
     documents = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    base = tempfile.mkdtemp(prefix="lsh_idx_")
+    base = workspace("lsh_idx_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedLshIndex(
         spark,
@@ -854,7 +842,7 @@ def streaming_neardup_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .streaming.windows import read_events_stream, require_stream_progress
 
-    base = tempfile.mkdtemp(prefix="stream_lsh_")
+    base = workspace("stream_lsh_")
     index = MaterializedLshIndex(
         spark,
         VersionedTable(spark, f"{base}/idx", write_partitions=4),
@@ -1057,7 +1045,7 @@ def streaming_neardup_pair_emission(
     from .operators.dedup import MaterializedLshIndex
     from .streaming.windows import read_events_stream, require_stream_progress
 
-    base = tempfile.mkdtemp(prefix="stream_emit_")
+    base = workspace("stream_emit_")
     index = MaterializedLshIndex(
         spark,
         VersionedTable(spark, f"{base}/idx", write_partitions=4),
@@ -1165,7 +1153,7 @@ def incremental_ivf_assign_maintenance(
         (F.col("vec_id") / 150).cast("long").alias("centroid_id"),
         F.col("embedding"),
     )
-    base = tempfile.mkdtemp(prefix="ivf_idx_")
+    base = workspace("ivf_idx_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedIvfIndex(
         spark,
@@ -1267,7 +1255,7 @@ def ngram_decontamination_index_maintenance(
         "holdout"
     )
     train = documents.where(split == "train")
-    base = tempfile.mkdtemp(prefix="ngram_idx_")
+    base = workspace("ngram_idx_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedNgramIndex(
         spark,
@@ -1435,7 +1423,7 @@ def exact_substring_incremental_ingest(
         documents.where((key > t1) & (key <= t2)),
         documents.where(key > t2),
     ]
-    base = tempfile.mkdtemp(prefix="xsub_inc_")
+    base = workspace("xsub_inc_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedNgramIndex(
         spark,
@@ -1463,9 +1451,11 @@ def exact_substring_incremental_ingest(
         # calls them sequentially) — submitting both lets the light
         # src commit back-fill cores idled by the trim job's tail.
         # Both must land before the refresh reads src's watermark.
+        # Each pool thread runs under a copy of the caller's local
+        # properties, so both commits keep its job group.
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fc = pool.submit(corpus.write, trimmed, mode)
-            fs = pool.submit(src.write, batch, mode)
+            fc = pool.submit(inheritable_thread_target(spark)(corpus.write), trimmed, mode)
+            fs = pool.submit(inheritable_thread_target(spark)(src.write), batch, mode)
             fc.result()
             fs.result()
         lo, hi = index.refresh(       # folds commit i only
@@ -1550,7 +1540,7 @@ def streaming_decontamination_ingest(
     split = F.when(hash_bucket(F.col("doc_id")) < 90, "train").otherwise(
         "holdout"
     )
-    base = tempfile.mkdtemp(prefix="stream_decon_")
+    base = workspace("stream_decon_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedNgramIndex(
         spark,
@@ -1724,7 +1714,7 @@ def lsh_index_gdpr_tombstone_maintenance(
     documents = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
-    base = tempfile.mkdtemp(prefix="lsh_gdpr_")
+    base = workspace("lsh_gdpr_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     index = MaterializedLshIndex(
         spark,
@@ -1829,11 +1819,9 @@ def scd2_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.scd import scd2_from_changes
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="scd2_")
+    base = workspace("scd2_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
         key = F.col("o_orderkey")
@@ -1849,8 +1837,6 @@ def scd2_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         source.merge(feed, primary_keys=["o_orderkey"])
         changes = source.read_changes(0, source.latest_version())
         return scd2_from_changes(changes, ["o_orderkey"], ["o_totalprice"])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -1908,7 +1894,7 @@ def ann_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") / 50).cast("long").alias("centroid_id"),
         F.col("embedding"),
     )
-    base = tempfile.mkdtemp(prefix="ann_index_")
+    base = workspace("ann_index_")
     index_table = VersionedTable(spark, f"{base}/ivf_index", write_partitions=1)
     index_table.write(centroids, mode="overwrite")
     persisted = index_table.read()
@@ -2194,7 +2180,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     orders = load_table(spark, sf_dir, "orders").select(*_ORDER_COLS)
-    base = tempfile.mkdtemp(prefix="ivm_")
+    base = workspace("ivm_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     view = MaterializedAggregate(
         spark,
@@ -2202,9 +2188,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_keys=["o_orderstatus"],
         sum_measures={"revenue": "o_totalprice"},
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         source.write(orders.where(key % 4 == 1), mode="overwrite")
         source.write(orders.where(key % 4 == 2), mode="append")
@@ -2226,8 +2210,6 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(COUNT_COL).alias("order_cnt"),
             F.col("revenue").cast("double").alias("revenue"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -2262,7 +2244,7 @@ def gdpr_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.incremental import run_incremental_activity
 
     customer = load_table(spark, sf_dir, "customer")
-    base = tempfile.mkdtemp(prefix="gdpr_")
+    base = workspace("gdpr_")
     bronze = VersionedTable(spark, f"{base}/bronze", write_partitions=4)
     silver = VersionedTable(spark, f"{base}/silver", write_partitions=4)
     state = VersionedTable(spark, f"{base}/state", write_partitions=1)
@@ -2272,9 +2254,7 @@ def gdpr_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         primary_keys=["c_custkey_hashed"],
         transform=lambda df: pseudo_transform(df, TABLE_CONFIG["customer"]),
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         bronze.write(customer, mode="overwrite")
         run()
         forget = customer.where(F.col("c_custkey") % 13 == 0).withColumn(
@@ -2283,8 +2263,6 @@ def gdpr_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         bronze.merge(forget, primary_keys=["c_custkey"])
         run()
         return silver.read()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -2315,7 +2293,7 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") % 5 == 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    path = tempfile.mkdtemp(prefix="csv_rt_") + "/orders"
+    path = workspace("csv_rt_") + "/orders"
     write_csv(orders, path)
     back = read_csv(
         spark, path,
@@ -2365,7 +2343,7 @@ def json_source_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("detail"),
         )
     )
-    path = tempfile.mkdtemp(prefix="json_rt_") + "/orders"
+    path = workspace("json_rt_") + "/orders"
     write_json_lines(orders, path)
     back = read_json_lines(
         spark, path,
@@ -2408,7 +2386,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("l_orderkey") % 11 == 0)
         .select("l_orderkey", "l_returnflag", "l_linestatus", "l_extendedprice")
     )
-    path = tempfile.mkdtemp(prefix="orc_rt_") + "/lineitem"
+    path = workspace("orc_rt_") + "/lineitem"
     write_orc(lineitem, path)
     back = read_orc(spark, path)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -2472,7 +2450,7 @@ def incremental_join_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             .select("n_name", "o_totalprice", CHANGE_TYPE)
         )
 
-    base = tempfile.mkdtemp(prefix="join_ivm_")
+    base = workspace("join_ivm_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     view = MaterializedAggregate(
         spark,
@@ -2480,9 +2458,7 @@ def incremental_join_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
         group_keys=["n_name"],
         sum_measures={"revenue": "o_totalprice"},
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         source.write(orders.where(key % 4 == 1), mode="overwrite")
         source.write(orders.where(key % 4 == 2), mode="append")
@@ -2502,8 +2478,6 @@ def incremental_join_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFr
             F.col(COUNT_COL).alias("order_cnt"),
             F.col("revenue").cast("double").alias("revenue"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -2572,11 +2546,9 @@ def incremental_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     documents = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base_dir = tempfile.mkdtemp(prefix="inc_neardup_")
+    base_dir = workspace("inc_neardup_")
     index = VersionedTable(spark, f"{base_dir}/sig_index", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         def signatures(docs: DataFrame) -> DataFrame:
             sh = docs.select(
                 "doc_id", word_shingles(F.col("text"), 3).alias("shingles")
@@ -2633,8 +2605,6 @@ def incremental_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return verified.where(F.col("jaccard") >= 0.8)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -2711,31 +2681,29 @@ def streaming_classify_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     cond = cond.cache()
     priors = priors.cache()
 
-    base = tempfile.mkdtemp(prefix="stream_nb_")
+    base = workspace("stream_nb_")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_events_stream(
         spark, sf_dir, schema, ts_col="_none", glob="documents.parquet"
     )
     target = VersionedTable(spark, f"{base}/scored", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
+        with sql_conf(spark, **_PROTOCOL_SHUFFLE):
 
-        def score_batch(batch_df, batch_id: int) -> None:
-            scored = nb_score(batch_df, "text", "doc_id", cond, priors, "lang")
-            target.write(scored, mode="append")
+            def score_batch(batch_df, batch_id: int) -> None:
+                scored = nb_score(batch_df, "text", "doc_id", cond, priors, "lang")
+                target.write(scored, mode="append")
 
-        q = (
-            stream.writeStream.foreachBatch(score_batch)
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        require_stream_progress(q, os.path.join(sf_dir, "documents.parquet"))
-        return target.read()
+            q = (
+                stream.writeStream.foreachBatch(score_batch)
+                .option("checkpointLocation", f"{base}/ck")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(300)
+            require_stream_progress(q, os.path.join(sf_dir, "documents.parquet"))
+            return target.read()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         cond.unpersist()
         priors.unpersist()
 
@@ -2837,7 +2805,7 @@ def incremental_lm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="ivm_lm_")
+    base = workspace("ivm_lm_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     view = MaterializedAggregate(
         spark,
@@ -2852,9 +2820,7 @@ def incremental_lm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split(F.col("text"), " ")).alias("tok"), *reserved
         ).where(F.col("tok") != "")
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("doc_id")
         source.write(docs.where(key % 4 != 3), mode="overwrite")
         view.refresh(source, transform=explode_tokens)
@@ -2870,8 +2836,6 @@ def incremental_lm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         source.merge(feed, primary_keys=["doc_id"])
         view.refresh(source, transform=explode_tokens)
         return view.table.read().select("tok", F.col(COUNT_COL))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -2907,14 +2871,12 @@ def txn_atomic_pseudonymise_advance(spark: SparkSession, sf_dir: str) -> DataFra
     from pyspark.sql import Row
 
     events = load_table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="txn_advance_")
+    base = workspace("txn_advance_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     out = VersionedTable(spark, f"{base}/out", write_partitions=4)
     state = VersionedTable(spark, f"{base}/state", write_partitions=1)
     key = F.col("event_id")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         src.write(events.where(key % 3 == 0), mode="overwrite")
         src.write(events.where(key % 3 == 1), mode="append")
 
@@ -2946,8 +2908,6 @@ def txn_atomic_pseudonymise_advance(spark: SparkSession, sf_dir: str) -> DataFra
             F.col("low_watermark").alias("wm_next")
         )
         return out.read().crossJoin(F.broadcast(wm))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _ikll_oracle() -> str:
@@ -3016,7 +2976,7 @@ def incremental_quantile_maintenance(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="ikll_")
+    base = workspace("ikll_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     sketch = MaterializedSketch(
         spark,
@@ -3026,9 +2986,7 @@ def incremental_quantile_maintenance(
         inc_rounds=4,
         merge_rounds=2,
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         src.write(orders.where(key % 3 == 0), mode="overwrite")
         lo, hi = sketch.refresh(src)                   # folds v0
@@ -3042,8 +3000,6 @@ def incremental_quantile_maintenance(
         lo, hi = sketch.refresh(src)                   # replay: no-op
         assert lo > hi, "replayed refresh must be a no-op"
         return sketch.quantiles([0.25, 0.5, 0.75, 0.95])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _itdigest_oracle() -> str:
@@ -3172,7 +3128,7 @@ def incremental_tdigest_maintenance(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="itd_")
+    base = workspace("itd_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     dig = MaterializedTDigest(
         spark,
@@ -3180,9 +3136,7 @@ def incremental_tdigest_maintenance(
         value_col="o_totalprice",
         delta=50,
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         src.write(orders.where(key % 3 == 0), mode="overwrite")
         lo, hi = dig.refresh(src)                      # folds v0
@@ -3196,8 +3150,6 @@ def incremental_tdigest_maintenance(
         lo, hi = dig.refresh(src)                      # replay: no-op
         assert lo > hi, "replayed refresh must be a no-op"
         return dig.quantiles([0.25, 0.5, 0.75, 0.95])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -3253,7 +3205,7 @@ def incremental_drift_maintenance(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
-    base = tempfile.mkdtemp(prefix="idrift_")
+    base = workspace("idrift_")
     source = VersionedTable(spark, f"{base}/src", write_partitions=4)
     view = MaterializedAggregate(
         spark,
@@ -3271,9 +3223,7 @@ def incremental_drift_maintenance(
             ),
         ).withColumn("bin", F.least(F.floor(v / 6_000_000), F.lit(9)))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         yr = F.year("o_orderdate")
         source.write(orders.where(yr <= 1997), mode="overwrite")
         lo, hi = view.refresh(source, transform=to_bins)     # ref era
@@ -3319,8 +3269,6 @@ def incremental_drift_maintenance(
                 "psi_term"
             ),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -3367,7 +3315,7 @@ def incremental_distinct_maintenance(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    base = tempfile.mkdtemp(prefix="itheta_")
+    base = workspace("itheta_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     sketch = MaterializedThetaSketch(
         spark,
@@ -3375,9 +3323,7 @@ def incremental_distinct_maintenance(
         key_col="o_custkey",
         k=64,
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         src.write(orders.where(key % 3 == 0), mode="overwrite")
         lo, hi = sketch.refresh(src)                   # folds v0
@@ -3401,8 +3347,6 @@ def incremental_distinct_maintenance(
             .crossJoin(F.broadcast(exact))
             .crossJoin(F.broadcast(wm))
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -3459,7 +3403,7 @@ def incremental_frequency_maintenance(
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    base = tempfile.mkdtemp(prefix="icm_")
+    base = workspace("icm_")
     src = VersionedTable(spark, f"{base}/src", write_partitions=4)
     mcm = MaterializedCountMin(
         spark,
@@ -3468,9 +3412,7 @@ def incremental_frequency_maintenance(
         depth=4,
         width=256,
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         key = F.col("o_orderkey")
         src.write(orders.where(key % 3 == 0), mode="overwrite")
         lo, hi = mcm.refresh(src)                      # folds v0
@@ -3504,8 +3446,6 @@ def incremental_frequency_maintenance(
                 "wm_next", F.lit(mcm.applied_hi() + 1).cast("long")
             )
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -3540,7 +3480,7 @@ def orc_source_partitioned_roundtrip(
         .where(F.col("l_orderkey") % 7 == 0)
         .select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity")
     )
-    path = tempfile.mkdtemp(prefix="orc_rt_") + "/lineitem"
+    path = workspace("orc_rt_") + "/lineitem"
     orders_slice.write.mode("overwrite").partitionBy("l_returnflag").orc(path)
     from .io import read_orc
     from .queries import dec_sum
@@ -3915,7 +3855,7 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("c_custkey") % 3 == 0)
         .select("c_custkey", "c_mktsegment", "c_acctbal")
     )
-    path = tempfile.mkdtemp(prefix="xml_rt_") + "/customer"
+    path = workspace("xml_rt_") + "/customer"
     (
         customers.write.format("xml")
         .option("rootTag", "customers")
@@ -4004,7 +3944,7 @@ def wap_publish_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="wap_pub_")
+    base = workspace("wap_pub_")
     t = VersionedTable(spark, f"{base}/tbl", write_partitions=4)
     audits = {
         "no_mass_delete": lambda staged, live: (
@@ -4014,9 +3954,7 @@ def wap_publish_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             staged.join(live, "event_id", "left_semi").count() == 0
         ),
     }
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         t.stage(events.where(F.col("event_id") % 2 == 0), "inc-1")
         t.publish_staged("inc-1", audits=audits)
         t.stage(events.where(F.col("event_id") % 2 == 1), "inc-2")
@@ -4029,8 +3967,6 @@ def wap_publish_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         except ConstraintViolationError:
             t.abort_staged("inc-3-dup")
         return t.read().select("event_id", "user_id", "event_type")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -4064,18 +4000,14 @@ def update_cdc_images_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    base = tempfile.mkdtemp(prefix="upd_cdc_")
+    base = workspace("upd_cdc_")
     t = VersionedTable(spark, f"{base}/tbl", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         t.write(events, mode="overwrite")
         v = t.update(F.col("user_id") % 10 == 3, {"value": F.lit(0.0)})
         return t.read_changes(v, v).select(
             "event_id", "user_id", "value", "_change_type"
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 @query(
@@ -4104,11 +4036,9 @@ def branch_merge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="branch_pipe_")
+    base = workspace("branch_pipe_")
     t = VersionedTable(spark, f"{base}/tbl", write_partitions=4)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with sql_conf(spark, **_PROTOCOL_SHUFFLE):
         t.write(events.where(F.col("event_id") % 3 != 2), mode="overwrite")
         br = t.create_branch("upcase-third")
         br.write(
@@ -4119,8 +4049,6 @@ def branch_merge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.merge_branch("upcase-third")
         return t.read().select("event_id", "user_id", "event_type")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 #: (applicationId, abspath(sf_dir)) -> (orders_table, lineitem_table).
@@ -4157,6 +4085,7 @@ def _bucketed_layout(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     token = uuid.uuid4().hex[:12]
+    # memoised across queries by design, so outside any query workspace
     base = tempfile.mkdtemp(prefix="ds_bkt_")
     names = (f"ds_bkt_orders_{token}", f"ds_bkt_lineitem_{token}")
     for df, name, bucket_col in (

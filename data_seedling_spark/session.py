@@ -15,6 +15,11 @@ driver contract) gets the same Catalyst posture:
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -59,3 +64,84 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Queries share one session, so what a query sets, writes or caches is
+# given back: ``sql_conf`` scopes conf inside a query; ``query_scope``,
+# held by the caller that owns the action, releases the rest after it.
+_ROOT: ContextVar[str | None] = ContextVar("workspace_root", default=None)
+
+
+def conf_snapshot(spark: SparkSession):
+    """Every explicitly set SQL conf entry as one immutable JVM map (one
+    round trip, where ``spark.conf.getAll`` pays one per entry)."""
+    return spark.conf._jconf.getAllAsJava()
+
+
+def conf_changes(before, after) -> set[str]:
+    """Keys whose value differs between two :func:`conf_snapshot` maps."""
+    if before.equals(after):
+        return set()
+    keys = set(before.keySet().toArray()) | set(after.keySet().toArray())
+    return {key for key in keys if before.get(key) != after.get(key)}
+
+
+def _restore(spark: SparkSession, prior, keys) -> None:
+    for key in keys:
+        value = prior.get(key)
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+@contextmanager
+def sql_conf(spark: SparkSession, **overrides) -> Iterator[None]:
+    """Set SQL conf ``overrides`` for the body; on exit restore each
+    key's previous value, unsetting a key that was unset."""
+    prior = conf_snapshot(spark)
+    for key, value in overrides.items():
+        spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        _restore(spark, prior, overrides)
+
+
+def workspace(prefix: str) -> str:
+    """A fresh temp dir, under the enclosing :func:`query_scope`'s root
+    (removed on release) or, outside any scope, the system temp dir."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_ROOT.get())
+
+
+def _cached_plans(manager) -> set:
+    # the CacheManager has no public getter for its entries
+    field = manager.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(manager)
+    return {entries.apply(i).plan() for i in range(entries.size())}
+
+
+@contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Own one query's session footprint until its action has run. On
+    exit, SQL conf is restored to the entry snapshot, the workspace
+    root is removed, and the DataFrame caches and persisted RDDs (local
+    checkpoints too) made inside are released."""
+    manager = spark._jsparkSession.sharedState().cacheManager()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    conf, plans = conf_snapshot(spark), _cached_plans(manager)
+    rdds = set(persistent().keySet().toArray())
+    token = _ROOT.set(workspace("ds_query_"))
+    try:
+        yield
+    finally:
+        root = _ROOT.get()
+        _ROOT.reset(token)
+        _restore(spark, conf, conf_changes(conf, conf_snapshot(spark)))
+        shutil.rmtree(root, ignore_errors=True)
+        for plan in _cached_plans(manager) - plans:
+            manager.uncacheQuery(spark._jsparkSession, plan, False, True)
+        now = persistent()
+        for rdd_id in set(now.keySet().toArray()) - rdds:
+            now.get(rdd_id).unpersist(True)

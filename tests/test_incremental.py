@@ -167,3 +167,31 @@ def test_first_write_applies_net_effect_and_rejects_updates(spark, tmp_path):
             Increment(bad, inc.low_watermark, inc.high_watermark),
             ["key"], state2, ACTIVITY, TABLE,
         )
+
+
+def test_commit_pool_runs_under_the_callers_job_group(spark):
+    """exact_substring_incremental_ingest overlaps its two ledger
+    commits on a thread pool. Under pinned-thread mode a bare pool
+    thread starts with empty local properties, so its jobs would run
+    outside the caller's job group, where attribution and
+    cancelJobGroup cannot see them."""
+    from data_seedling_spark.queries import registry
+    from data_seedling_spark.session import query_scope
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+    settle()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("commit-pool", "commit-pool")
+    try:
+        with query_scope(spark):
+            registry()["exact_substring_incremental_ingest"].fn(spark, SF_SMOKE)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    settle()
+    assert tracker.getJobIdsForGroup("commit-pool")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

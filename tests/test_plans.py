@@ -8,9 +8,13 @@ sf0.01 and fatal at 100 TB.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from data_seedling_spark.queries import registry
+from data_seedling_spark.session import conf_changes, conf_snapshot, query_scope, sql_conf
 from tests.conftest import SF_SMOKE
 
 
@@ -294,7 +298,16 @@ def test_ivfpq_residual_no_python_no_cartesian(spark, reg):
     assert not _unpartitioned_windows(plan)
 
 
-def test_registry_wide_plan_hygiene(spark, reg):
+# SQL conf a query may leave set for its returned frame's action (the
+# events loader's nanos repair, the recursive CTE's row guardrail); the
+# caller's query_scope restores it on release.
+CONF_LEFT_FOR_ACTION = {
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.cteRecursionRowLimit",
+}
+
+
+def test_registry_wide_plan_hygiene(spark, reg, tmp_path, monkeypatch):
     """Sweep EVERY registered query's physical plan for the
     anti-patterns that are invisible at test SF and fatal at 100 TB:
     an unbroadcast cartesian product, a row-at-a-time Python UDF, and
@@ -305,7 +318,16 @@ def test_registry_wide_plan_hygiene(spark, reg):
     in config.GLOBAL_WINDOW_ALLOWED. Broadcast cross joins of scalar
     frames (BroadcastNestedLoopJoin) and Arrow-batched Python
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are
-    legitimate and stay allowed."""
+    legitimate and stay allowed.
+
+    Each query also runs inside a ``query_scope`` and must leave the
+    shared session as it found it: before release it may only have
+    set ``CONF_LEFT_FOR_ACTION``; after release the SQL conf equals
+    the pre-call snapshot, no new temp dir remains, and no RDD or
+    DataFrame cache entry it persisted is still registered. The temp
+    dir is private to this test, so only the queries' own dirs land
+    there; the one exception is ``_bucketed_layout``'s memoised build,
+    at most one at a time."""
     # UDTF surface demo: BatchEvalPythonUDTF is the point of the query.
     # Single source of truth shared with tools/plan_doctor.py so the
     # two gates cannot disagree.
@@ -313,13 +335,38 @@ def test_registry_wide_plan_hygiene(spark, reg):
         GLOBAL_WINDOW_ALLOWED as gwin_ok,
         PYTHON_ROWWISE_ALLOWED as python_ok,
     )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def persisted_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    cached = spark._jsparkSession.sharedState().cacheManager().numCachedEntries
     offenders = []
     for name in reg:
-        try:
-            plan = plan_of(spark, reg, name)
-        except Exception as exc:  # pragma: no cover - fail loudly below
-            offenders.append((name, f"plan build failed: {exc}"))
-            continue
+        conf = conf_snapshot(spark)
+        dirs = set(os.listdir(tmp_path))
+        rdds, n_cached = persisted_rdds(), cached()
+        with query_scope(spark):
+            try:
+                plan = plan_of(spark, reg, name)
+            except Exception as exc:  # pragma: no cover - fail loudly below
+                offenders.append((name, f"plan build failed: {exc}"))
+                plan = ""
+            left = conf_changes(conf, conf_snapshot(spark)) - CONF_LEFT_FOR_ACTION
+            if left:
+                offenders.append((name, f"conf left set: {sorted(left)}"))
+        if conf_changes(conf, conf_snapshot(spark)):
+            offenders.append((name, "conf not restored on release"))
+        now = set(os.listdir(tmp_path))
+        layouts = {d for d in now if d.startswith("ds_bkt_")}
+        if now - dirs - layouts or len(layouts) > 1:
+            offenders.append((name, f"temp dirs left: {sorted(now - dirs)}"))
+        # the context cleaner may drop earlier tests' blocks meanwhile,
+        # so a query is judged by what it added, not by the totals
+        added = persisted_rdds() - rdds
+        if added or cached() > n_cached:
+            offenders.append((name, f"persisted left: rdds {sorted(added)}, "
+                                    f"cache entries {n_cached} -> {cached()}"))
         if "CartesianProduct" in plan:
             offenders.append((name, "CartesianProduct"))
         cleaned = plan.replace("BatchEvalPythonUDTF", "")
@@ -367,17 +414,13 @@ def test_bucketed_join_has_no_join_side_exchange(spark, reg):
     — the only Exchange in the whole query belongs to the final
     groupBy aggregate. Also assert the scans actually select buckets
     (the layout is being used, not coincidentally absent)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # on the smoke table AQE broadcasts the tiny side, which hides the
     # property under test: force the sort-merge planner so the join
     # must satisfy its distribution from the BUCKETED layout alone
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with sql_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": -1}):
         df = reg["bucketed_colocated_join"].fn(spark, SF_SMOKE)
         df.write.format("noop").mode("overwrite").save()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     final = plan.split("== Initial Plan ==")[0]  # AQE-final section
     assert "SortMergeJoin" in final
     assert "Bucketed: true" in final  # bucketed scans engaged

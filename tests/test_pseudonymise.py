@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -93,17 +94,16 @@ def test_broadcast_lookup_udf(spark):
     shipped to executors once via sc.broadcast and used inside a
     vectorized UDF — the lookup-table flavor (model engines use
     per-worker lazy init instead; see pipelines docstring)."""
-    import pandas as pd
     from pyspark.sql import Row
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     lookup = spark.sparkContext.broadcast({0: "AFRICA", 1: "AMERICA", 2: "ASIA"})
 
-    # no type hints: stringified annotations (PEP 563) don't resolve a
-    # test-local `pd` import, so declare the eval type via the decorator
-    @F.pandas_udf(T.StringType(), F.PandasUDFType.SCALAR)
-    def region_name(keys):
+    # the hints are strings (PEP 563) resolved against module globals,
+    # hence the module-level pandas import
+    @F.pandas_udf(T.StringType())
+    def region_name(keys: pd.Series) -> pd.Series:
         table = lookup.value  # deserialized once per worker, not per row
         return keys.map(lambda k: table.get(k, "UNKNOWN"))
 

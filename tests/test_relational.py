@@ -10,6 +10,7 @@ from data_seedling_spark.operators.relational import (
     salted_join,
     write_bucketed,
 )
+from data_seedling_spark.session import sql_conf
 from tests.conftest import SF_SMOKE
 
 
@@ -22,14 +23,10 @@ def test_bucketed_join_has_no_exchange(spark):
     write_bucketed(lineitem, "b_lineitem", "o_orderkey", buckets=4)
     # force a sort-merge join so the test checks bucket co-location
     # (a broadcast join would hide the shuffle anyway)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with sql_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": -1}):
         joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan, plan[:2000]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # result parity with the plain join
     plain = orders.join(lineitem, "o_orderkey")
     assert joined.count() == plain.count()
@@ -94,20 +91,16 @@ def test_runtime_bloom_filter_prunes_big_side(spark):
     induces a bloom_filter_agg on the small side and a might_contain
     probe on the fact side's scan — row-level pruning before the
     shuffle (the 100 TB join lever beyond static partition pruning)."""
-    from data_seedling_spark.operators.relational import enable_runtime_bloom
+    from data_seedling_spark.operators.relational import (
+        RUNTIME_BLOOM_CONF,
+        enable_runtime_bloom,
+    )
 
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
+    # sql_conf owns the restore of everything enable_runtime_bloom sets
+    with sql_conf(
+        spark, **RUNTIME_BLOOM_CONF, **{"spark.sql.autoBroadcastJoinThreshold": -1}
+    ):
         enable_runtime_bloom(spark)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").where(
             F.col("o_totalprice") > 400000
         )
@@ -120,12 +113,6 @@ def test_runtime_bloom_filter_prunes_big_side(spark):
         assert j.count() == lineitem.join(
             orders, F.col("l_orderkey") == F.col("o_orderkey")
         ).count()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_interval_join_matches_theta_join_no_nested_loop(spark):

@@ -21,7 +21,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_seedling_spark.session import build_session  # noqa: E402
+from data_seedling_spark.session import build_session, query_scope  # noqa: E402
 from data_seedling_spark.tables import TABLE_NAMES  # noqa: E402
 
 
@@ -94,7 +94,8 @@ def main() -> int:
         spec = reg[name]
         t0 = time.time()
         try:
-            sdf = spec.fn(spark, args.sf).toPandas()
+            with query_scope(spark):
+                sdf = spec.fn(spark, args.sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
