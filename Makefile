@@ -46,11 +46,11 @@ scale-data:
 	python tools/gen_scale.py --src /root/testdata/sf0.1 --dst /tmp/sf10 --k 100
 
 scale-probe:
-	python tools/scale_probe.py --sf /tmp/sf1
+	SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py --profile
 
 # The sf10 second-decade setting SCALE.md's round-10 tables were
 # measured at: 16 g single-JVM heap (per-executor sizing a real
 # cluster applies), 256 shuffle partitions (smaller per-task state).
 scale-probe-sf10:
-	SPARK_GRAFT_DRIVER_MEM=16g SPARK_GRAFT_SHUFFLE=256 \
-	python tools/scale_probe.py --sf /tmp/sf10
+	SPARK_GRAFT_DRIVER_MEM=16g SPARK_GRAFT_SHUFFLE=256 SPARK_GRAFT_SF_DIR=/tmp/sf10 \
+	python bench.py --profile

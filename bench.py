@@ -4,13 +4,19 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line ``{"metric", "value", "unit", "queries", "sf"}``.
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver-side collection cost). Timing excludes session startup and a
-one-query JVM warmup.
+Each query runs once per pass through ``measure.run``: forced
+end-to-end with the noop sink (full computation, no driver-side
+collection cost), its shuffle bytes read by its job group. Timing
+excludes session startup and a one-query JVM warmup.
+
+``python bench.py --profile [--passes N] [names]`` prints the full
+``measure.run`` record per query per pass instead (default names: the
+headline set; scale: ``$SPARK_GRAFT_SF_DIR``).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -19,7 +25,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from data_seedling_spark.session import build_session, query_scope  # noqa: E402
+from data_seedling_spark import measure  # noqa: E402
+from data_seedling_spark.session import build_session  # noqa: E402
 
 #: Headline set: one per major operator family; extended as phases land.
 HEADLINE = [
@@ -376,87 +383,50 @@ def drift_ratio(calibration_sec: float, baseline_sec: float | None) -> float:
     )
 
 
-def run_one(fn, spark, sf_dir: str) -> float:
-    # Queries persist() shared subtrees and hand cache ownership to the
-    # caller; the scope releases them (and conf, temp dirs) after the
-    # timed action, so runs stay independent and bench memory bounded.
-    with query_scope(spark):
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-    return wall
-
-
-def _stage_metrics(spark) -> dict:
-    """Cumulative stage-level metrics from the Spark status REST API.
-
-    Attributes where time goes (scan input vs shuffle vs executor
-    compute) so a bench regression points at a stage family, not just a
-    query. Returns zeros if the UI is disabled."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return {}
-    app_id = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages?status=complete", timeout=10
-        ) as resp:
-            stages = json.load(resp)
-    except Exception:
-        return {}
-    acc = {
-        "executor_run_ms": 0,
-        "executor_cpu_ms": 0,
-        "input_bytes": 0,
-        "shuffle_read_bytes": 0,
-        "shuffle_write_bytes": 0,
-        "spill_bytes": 0,
-        "stages": 0,
-    }
-    for s in stages:
-        acc["executor_run_ms"] += s.get("executorRunTime", 0)
-        acc["executor_cpu_ms"] += s.get("executorCpuTime", 0) // 1_000_000
-        acc["input_bytes"] += s.get("inputBytes", 0)
-        acc["shuffle_read_bytes"] += s.get("shuffleReadBytes", 0)
-        acc["shuffle_write_bytes"] += s.get("shuffleWriteBytes", 0)
-        acc["spill_bytes"] += s.get("diskBytesSpilled", 0)
-        acc["stages"] += 1
-    return acc
-
-
-def profile(names: list[str] | None = None) -> None:
-    """`bench.py --profile [names]`: one line per query with wall time
-    plus the stage-metric delta (shuffle/input/compute attribution)."""
+def profile(names: list[str], passes: int) -> None:
+    """`bench.py --profile [--passes N] [names]`: one measure.run record
+    per query per pass, as a JSON line. A query that raises prints
+    ``{"query", "error"}`` and the run goes on."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # The standard session turns the UI off; the status REST API that
-    # serves the stage metrics lives behind it.
     spark = build_session("bench-profile", extra_conf={"spark.ui.enabled": "true"})
 
     from data_seedling_spark.queries import registry
 
     reg = registry()
     selected = names or [n for n in HEADLINE if n in reg]
-    run_one(reg[selected[0]].fn, spark, sf_dir)  # warmup
-
-    for name in selected:
-        before = _stage_metrics(spark)
-        wall = run_one(reg[name].fn, spark, sf_dir)
-        after = _stage_metrics(spark)
-        delta = {
-            k: after.get(k, 0) - before.get(k, 0)
-            for k in after
-        }
-        delta.update({"query": name, "wall_sec": round(wall, 3)})
-        print(json.dumps(delta), flush=True)
+    measure.run(spark, selected[0], sf_dir)  # warmup
+    for _pass in range(passes):
+        for name in selected:
+            try:
+                record = {**measure.run(spark, name, sf_dir), "pass": _pass}
+            except Exception as e:  # noqa: BLE001 - keep profiling
+                record = {"query": name, "error": f"{type(e).__name__}: {e}"[:300]}
+            print(json.dumps(record), flush=True)
 
 
 def main() -> None:
-    if "--profile" in sys.argv:
-        idx = sys.argv.index("--profile")
-        profile(sys.argv[idx + 1 :] or None)
+    # Bench the throughput configuration: the Arrow/BLAS kernels are
+    # the library default since r9 (similarity.arrow_assign_enabled),
+    # but the hash-checked oracle queries pin arrow=False via
+    # similarity.oracle_arrow so the driver always verifies the
+    # engine-exact fold. DS_SPARK_BENCH_ARROW releases that pin for
+    # timing runs only — the same catalog entries are measured on the
+    # kernels they'd use in production (agreement vs the fold ≥0.999,
+    # tests/test_llm_ops.py). Set here, not at import: the tests import
+    # this module and must keep the oracle-pinned fold.
+    os.environ.setdefault("DS_SPARK_BENCH_ARROW", "1")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--profile", action="store_true",
+                    help="print one record per query per pass instead")
+    ap.add_argument("--passes", type=int, default=1, help="with --profile")
+    ap.add_argument("names", nargs="*", help="with --profile (default: HEADLINE)")
+    args = ap.parse_args()
+    if args.profile:
+        profile(args.names, args.passes)
         return
+    if args.names or args.passes != 1:
+        ap.error("query names and --passes need --profile")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
@@ -466,16 +436,6 @@ def main() -> None:
     # regressions (r9 ADVICE #4). Off-sf runs still time everything —
     # they just neither seed nor judge against the sf0.1 records.
     at_baseline_sf = abs(sf - 0.1) < 1e-9
-
-    # Bench the throughput configuration: the Arrow/BLAS kernels are
-    # the library default since r9 (similarity.arrow_assign_enabled),
-    # but the hash-checked oracle queries pin arrow=False via
-    # similarity.oracle_arrow so the driver always verifies the
-    # engine-exact fold. DS_SPARK_BENCH_ARROW releases that pin for
-    # timing runs only — the same catalog entries are measured on the
-    # kernels they'd use in production (agreement vs the fold ≥0.999,
-    # tests/test_llm_ops.py).
-    os.environ.setdefault("DS_SPARK_BENCH_ARROW", "1")
 
     from data_seedling_spark.queries import registry
 
@@ -501,13 +461,13 @@ def main() -> None:
         raise SystemExit(2)
     bounds = baseline_bounds.time_bounds()
 
-    # The status REST API (per-stage shuffle/input attribution) lives
-    # behind the UI; shuffle-bytes regression tracking needs it.
+    # measure.run reads each query's shuffle bytes from the status
+    # REST API, which lives behind the UI.
     spark = build_session("bench", extra_conf={"spark.ui.enabled": "true"})
 
     # Warm up the JVM / parquet footer caches on a small query.
     if names:
-        run_one(reg[names[0]].fn, spark, sf_dir)
+        measure.run(spark, names[0], sf_dir)
 
     # Steady-state timing: whole-stage codegen compiles on first
     # execution (measured ~7s for the widest generated method), so each
@@ -530,21 +490,10 @@ def main() -> None:
             min(calibration_text_sec, calibration_text_run(spark)), 3
         )
         for name in names:
+            record = measure.run(spark, name, sf_dir)
+            timings[name] = min(timings.get(name, float("inf")), record["wall_s"])
             if _pass == 0:
-                before = _stage_metrics(spark)
-            t = run_one(reg[name].fn, spark, sf_dir)
-            timings[name] = round(min(timings.get(name, float("inf")), t), 3)
-            if _pass == 0:
-                after = _stage_metrics(spark)
-                # The status API reports stages asynchronously, so a
-                # prior query's late stage can land inside this
-                # query's window — clamp at 0 rather than record a
-                # negative volume.
-                shuffle_bytes[name] = max(
-                    0,
-                    after.get("shuffle_write_bytes", 0)
-                    - before.get("shuffle_write_bytes", 0),
-                )
+                shuffle_bytes[name] = record["shuffle_bytes"]
 
     # Shuffle-bytes regression rule (VERDICT r8 #6): a plan regression
     # that hides inside the time bound on this 32-core box would not

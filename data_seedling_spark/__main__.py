@@ -6,14 +6,15 @@ write/monitor). One binary surface for every registry query::
     python -m data_seedling_spark list [--tag TAG]
     python -m data_seedling_spark run <query> [--sf-dir DIR] [-n N]
     python -m data_seedling_spark explain <query> [--sf-dir DIR]
-    python -m data_seedling_spark bench <query> [--sf-dir DIR] [--passes P]
+    python -m data_seedling_spark doctor <query> [--sf-dir DIR]
 
 ``run`` prints up to N rows as JSON lines (machine-consumable, like
 the driver contract); ``explain`` prints the formatted physical plan —
-the same artifact the plan tests assert on; ``bench`` times
-materialisation; ``doctor`` audits the plan for scale anti-patterns
-(cartesians, row-wise Python — JSON verdict, exit 1 on a hit). Exit
-code 1 on unknown query names, listing near matches.
+the same artifact the plan tests assert on; ``doctor`` audits the plan
+for scale anti-patterns (cartesians, row-wise Python — JSON verdict,
+exit 1 on a hit). Exit code 1 on unknown query names, listing near
+matches. To time a query: ``python bench.py --profile --passes 3
+<query>``.
 """
 
 from __future__ import annotations
@@ -21,8 +22,8 @@ from __future__ import annotations
 import argparse
 import difflib
 import json
+import os
 import sys
-import time
 
 
 def _build(args):
@@ -51,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
     for cmd, hlp in (
         ("run", "run a query, print JSON rows"),
         ("explain", "print the formatted physical plan"),
-        ("bench", "time a query's materialisation"),
         ("doctor", "audit the physical plan for scale anti-patterns"),
     ):
         cp = sub.add_parser(cmd, help=hlp)
@@ -59,8 +59,6 @@ def main(argv: list[str] | None = None) -> int:
         cp.add_argument("--sf-dir", default="/root/testdata/sf0.01")
         if cmd == "run":
             cp.add_argument("-n", type=int, default=20, help="max rows printed")
-        if cmd == "bench":
-            cp.add_argument("--passes", type=int, default=2)
 
     args = p.parse_args(argv)
 
@@ -77,20 +75,22 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}\t{oracle}\t{tags}")
         return 0
 
+    from .session import query_scope
+
     spec = _resolve(reg, args.query)
     spark = _build(args)
-    df = spec.fn(spark, args.sf_dir)
+    with query_scope(spark, args.query):
+        return _act(args, spec.fn(spark, args.sf_dir))
 
+
+def _act(args, df) -> int:
     if args.cmd == "explain":
         df.explain("formatted")
         return 0
 
     if args.cmd == "doctor":
-        import os as _os
-        import sys as _sys
-
-        _sys.path.insert(
-            0, _os.path.join(_os.path.dirname(_os.path.dirname(__file__)), "tools")
+        sys.path.insert(
+            0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
         )
         from plan_doctor import audit_plan
 
@@ -102,16 +102,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         print(json.dumps(audit))
         return 1 if audit["anti_pattern"] else 0
-
-    if args.cmd == "bench":
-        best = float("inf")
-        for _ in range(max(args.passes, 1)):
-            t0 = time.time()
-            n = df.count()
-            best = min(best, time.time() - t0)
-            df = spec.fn(spark, args.sf_dir)
-        print(json.dumps({"query": args.query, "rows": n, "best_sec": round(best, 3)}))
-        return 0
 
     # run
     for row in df.limit(args.n).collect():

@@ -330,8 +330,8 @@ def prefix_filter_jaccard_pairs(
     Cache ownership: the shared subtrees (``sh``, and ``pref`` on the
     hybrid path) are ``persist()``-ed because each feeds two consumers
     in the same plan; ownership passes to the CALLER, as across this
-    package — unpersist (or ``spark.catalog.clearCache()``, as
-    bench.py's run_one does) after materializing the result.
+    package — unpersist (or hold ``session.query_scope``, as
+    ``measure.run`` does) after materializing the result.
     """
     from pyspark.sql import Window
 

@@ -9,7 +9,9 @@ and the final snapshot is returned — which plain SQL can reproduce.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
@@ -4057,7 +4059,15 @@ def branch_merge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (the technique's payoff) while `bucketed_layout_build` measures the
 #: one-off ingest shuffle (its cost) — the split the r9 verdict asked
 #: for after the combined entry billed the build to the join.
-_BUCKETED_LAYOUTS: dict[tuple[str, str], tuple[str, str]] = {}
+_BUCKETED_LAYOUTS: dict[tuple[str, str], tuple[tuple[str, str], str]] = {}
+
+
+@atexit.register
+def _drop_bucketed_layouts() -> None:
+    # the live builds' dirs outlive every query; a superseded build's
+    # dir is deleted by the refresh that replaces it
+    for _, base in _BUCKETED_LAYOUTS.values():
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _bucketed_layout(
@@ -4071,8 +4081,8 @@ def _bucketed_layout(
     dirs accumulate under spark-warehouse/ (r9 ADVICE #5). A refresh
     drops the previous build's catalog entries for this key AND
     deletes its data directory, so at most one build's files exist
-    per (session, dataset) at any time."""
-    import shutil
+    per (session, dataset) at any time, and none after the process
+    exits."""
     import uuid
 
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))

@@ -70,6 +70,7 @@ def build_session(
 # given back: ``sql_conf`` scopes conf inside a query; ``query_scope``,
 # held by the caller that owns the action, releases the rest after it.
 _ROOT: ContextVar[str | None] = ContextVar("workspace_root", default=None)
+_GROUP = "spark.jobGroup.id"
 
 
 def conf_snapshot(spark: SparkSession):
@@ -122,22 +123,33 @@ def _cached_plans(manager) -> set:
     return {entries.apply(i).plan() for i in range(entries.size())}
 
 
+def job_group(name: str) -> str:
+    """The Spark job group :func:`query_scope` runs query ``name`` in."""
+    return f"ds:{name}"
+
+
 @contextmanager
-def query_scope(spark: SparkSession) -> Iterator[None]:
-    """Own one query's session footprint until its action has run. On
-    exit, SQL conf is restored to the entry snapshot, the workspace
-    root is removed, and the DataFrame caches and persisted RDDs (local
+def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
+    """Own one query's session footprint until its action has run. Its
+    Spark jobs run in :func:`job_group` ``(name)``. On exit, the
+    caller's job group and SQL conf are restored, the workspace root
+    is removed, and the DataFrame caches and persisted RDDs (local
     checkpoints too) made inside are released."""
+    sc = spark.sparkContext
     manager = spark._jsparkSession.sharedState().cacheManager()
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    persistent = sc._jsc.getPersistentRDDs
     conf, plans = conf_snapshot(spark), _cached_plans(manager)
     rdds = set(persistent().keySet().toArray())
+    group = sc.getLocalProperty(_GROUP)
+    # only the group id: jobs keep their own descriptions
+    sc.setLocalProperty(_GROUP, job_group(name))
     token = _ROOT.set(workspace("ds_query_"))
     try:
         yield
     finally:
         root = _ROOT.get()
         _ROOT.reset(token)
+        sc.setLocalProperty(_GROUP, group)
         _restore(spark, conf, conf_changes(conf, conf_snapshot(spark)))
         shutil.rmtree(root, ignore_errors=True)
         for plan in _cached_plans(manager) - plans:

@@ -9,6 +9,7 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrypoint  # noqa: E402
 
+from data_seedling_spark.session import query_scope  # noqa: E402
 from tests.conftest import SF_SMOKE  # noqa: E402
 
 
@@ -61,8 +62,9 @@ def test_all_window_queries_runnable_smoke(spark):
     build a plan against the smoke SF without raising."""
     q = entrypoint.queries()
     for name in list(q)[:50]:
-        df = q[name](spark, SF_SMOKE)
-        assert df.schema is not None, name
+        with query_scope(spark, name):
+            df = q[name](spark, SF_SMOKE)
+            assert df.schema is not None, name
 
 
 def test_cli_list_run_and_unknown(spark, capsys):

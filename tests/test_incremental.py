@@ -173,25 +173,30 @@ def test_commit_pool_runs_under_the_callers_job_group(spark):
     """exact_substring_incremental_ingest overlaps its two ledger
     commits on a thread pool. Under pinned-thread mode a bare pool
     thread starts with empty local properties, so its jobs would run
-    outside the caller's job group, where attribution and
-    cancelJobGroup cannot see them."""
+    outside the query scope's job group, where attribution and
+    cancelJobGroup cannot see them. The scope hands the caller's own
+    group back on exit."""
     from data_seedling_spark.queries import registry
-    from data_seedling_spark.session import query_scope
+    from data_seedling_spark.session import job_group, query_scope
     from tests.conftest import SF_SMOKE
 
+    name = "exact_substring_incremental_ingest"
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     settle = sc._jsc.sc().listenerBus().waitUntilEmpty
     settle()
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup("commit-pool", "commit-pool")
+    grouped = set(tracker.getJobIdsForGroup(job_group(name)))
+    sc.setJobGroup("caller", "caller")
     try:
-        with query_scope(spark):
-            registry()["exact_substring_incremental_ingest"].fn(spark, SF_SMOKE)
+        with query_scope(spark, name):
+            registry()[name].fn(spark, SF_SMOKE)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     settle()
-    assert tracker.getJobIdsForGroup("commit-pool")
+    assert set(tracker.getJobIdsForGroup(job_group(name))) - grouped
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert not tracker.getJobIdsForGroup("caller")

@@ -346,7 +346,7 @@ def test_registry_wide_plan_hygiene(spark, reg, tmp_path, monkeypatch):
         conf = conf_snapshot(spark)
         dirs = set(os.listdir(tmp_path))
         rdds, n_cached = persisted_rdds(), cached()
-        with query_scope(spark):
+        with query_scope(spark, name):
             try:
                 plan = plan_of(spark, reg, name)
             except Exception as exc:  # pragma: no cover - fail loudly below

@@ -22,17 +22,15 @@ broke the trigger conditions).
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def pruning_tables(spark):
+def pruning_tables(spark, tmp_path_factory):
     """A fact table partitioned by a low-cardinality key + a dim with
     a selective flag — the canonical DPP/bloom shape."""
-    base = tempfile.mkdtemp(prefix="scale_tech_")
+    base = str(tmp_path_factory.mktemp("scale_tech_"))
     facts = spark.range(20_000).select(
         F.col("id").alias("k"),
         (F.col("id") % 20).cast("string").alias("part"),

@@ -94,7 +94,7 @@ def main() -> int:
         spec = reg[name]
         t0 = time.time()
         try:
-            with query_scope(spark):
+            with query_scope(spark, name):
                 sdf = spec.fn(spark, args.sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")

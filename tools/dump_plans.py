@@ -16,7 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from data_seedling_spark.session import build_session  # noqa: E402
+from data_seedling_spark.session import build_session, query_scope  # noqa: E402
 
 
 def main() -> None:
@@ -34,11 +34,11 @@ def main() -> None:
 
     reg = registry()
     for name in args.names:
-        spark.catalog.clearCache()
-        df = reg[name].fn(spark, args.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with query_scope(spark, name):
+            df = reg[name].fn(spark, args.sf)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(args.out, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

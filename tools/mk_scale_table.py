@@ -1,7 +1,11 @@
-"""Render the SCALE.md ratio table from two scale_probe jsonl files.
+"""Render the SCALE.md ratio table from two `bench.py --profile` outputs.
 
-Usage: python tools/mk_scale_table.py /tmp/r8full_sf01.jsonl /tmp/r8full_sf1.jsonl
-Prints a markdown table (ratio desc) plus summary lines.
+Usage:
+    python bench.py --profile > sf01.jsonl
+    SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py --profile > sf1.jsonl
+    python tools/mk_scale_table.py sf01.jsonl sf1.jsonl
+Prints a markdown table (ratio desc) plus summary lines; a query's
+time is its best ``wall_s`` over the passes.
 """
 
 from __future__ import annotations
@@ -14,8 +18,8 @@ def load(path: str) -> dict[str, float]:
     out = {}
     for line in open(path):
         r = json.loads(line)
-        if "sec" in r:
-            out[r["query"]] = r["sec"]
+        if "wall_s" in r:
+            out[r["query"]] = min(out.get(r["query"], r["wall_s"]), r["wall_s"])
     return out
 
 
