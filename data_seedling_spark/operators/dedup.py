@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .matview import StateView
+
 # Driver-side construction memos (guide §5, driver round-trips): the
 # md5-LSH family rebuilds the same large expression trees on every
 # call — the 16-permutation signature aggregate alone is ~130 py4j
@@ -1308,7 +1310,7 @@ def minhash_md5_lsh_pairs(
     return verified.where(F.col("jaccard") >= threshold)
 
 
-class MaterializedLshIndex:
+class MaterializedLshIndex(StateView):
     """CDC-maintained MinHash-LSH band-row index — the NEAR-dup
     counterpart of exact dedup's incremental hash index (VERDICT r12
     #1, the missing 100 TB deployment shape in the dedup family).
@@ -1316,10 +1318,8 @@ class MaterializedLshIndex:
     Every one-shot near-dup operator re-shingles, re-signs, and
     re-bands the ENTIRE corpus per run; at corpus scale you never do
     that. This class persists the band rows ``(id, band, bkey)`` as a
-    ledger-backed index table (the same exactly-once protocol as
-    ``operators.matview.MaterializedAggregate``: the applied source
-    version rides inside the index commit as ``_source_hi``, so
-    apply+advance are one atomic commit and a replayed refresh is a
+    ledger-backed index table (the exactly-once refresh protocol of
+    ``operators.matview``'s module docstring: a replayed refresh is a
     no-op) and each :meth:`refresh` shingles/signs/bands ONLY that
     commit range's documents — O(increment text), an append-sized
     write. New-vs-all candidate generation then equi-joins the
@@ -1397,14 +1397,6 @@ class MaterializedLshIndex:
         )
         return md5_band_rows(sig, self.id_col, self.num_perm, self.bands)
 
-    def applied_hi(self) -> int:
-        """Highest source version folded into the index — read from the
-        index itself (metadata-sized scalar), so apply+advance stay one
-        atomic commit."""
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
-
     def refresh(self, source) -> tuple[int, int]:
         """Fold ``source`` versions ``(applied_hi, latest]`` into the
         index via the shared row-mapped-index protocol
@@ -1428,21 +1420,20 @@ class MaterializedLshIndex:
         applied_hi`` and no-ops instead of double-banding). Returns
         False when the batch was already applied. Same pattern as
         ``operators.matview.fold_stream_batch``."""
-        from .matview import SOURCE_HI, _marker_row
+        from .matview import stamp_commit
 
         if batch_id <= self.applied_hi():
             return False
-        rows = self.band_rows(
-            batch.select(self.id_col, self.text_col)
-        ).withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
         # The same NULL-id watermark marker as refresh_mapped_index:
         # a batch whose documents all band to zero rows still advances
         # the stored watermark atomically (ADVICE r13).
-        rows = rows.unionByName(_marker_row(rows, self.id_col, batch_id))
-        if not self.table.exists():
-            self.table.write(rows, mode="overwrite")
-        else:
-            self.table.write(rows, mode="append")
+        stamp_commit(
+            self.table,
+            self.band_rows(batch.select(self.id_col, self.text_col)),
+            batch_id,
+            "append",
+            marker_id=self.id_col,
+        )
         return True
 
     def read(self) -> DataFrame:
@@ -1509,7 +1500,7 @@ class MaterializedLshIndex:
         )
 
 
-class MaterializedNgramIndex:
+class MaterializedNgramIndex(StateView):
     """CDC-maintained n-gram FINGERPRINT index (VERDICT r13 #1) — the
     decontamination-side instance of the shared row-mapped-index
     protocol (:func:`matview.refresh_mapped_index`), closing the last
@@ -1638,11 +1629,6 @@ class MaterializedNgramIndex:
             deletes=self.deletes,
             precomputed=precomputed_keys,
         )
-
-    def applied_hi(self) -> int:
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
 
     def read(self) -> DataFrame:
         from .matview import read_mapped_index

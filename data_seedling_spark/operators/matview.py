@@ -1,4 +1,5 @@
-"""Incremental maintenance of materialized aggregates over a CDC feed.
+"""Incremental maintenance of CDC-fed views: materialized aggregates,
+row-mapped indexes, and the one exactly-once refresh path they share.
 
 The reference's incremental protocol (read change feed → apply →
 advance watermark; reference ``datalake.py:52-239``) mirrors *rows*
@@ -16,15 +17,41 @@ zero removed. (Non-distributive aggregates — MIN/MAX under deletes,
 COUNT DISTINCT — are not self-maintainable and are intentionally out of
 scope; recompute those.)
 
-Exactly-once without cross-table transactions: the applied source
-version rides *inside the view commit* as a ``_source_hi`` column, so
-the watermark advances atomically with the data (the same idea as
-Delta's per-stream ``txnAppId``/``txnVersion`` idempotent-writer
-markers and Structured Streaming's ``foreachBatch`` batch-id guard).
-A crash between "apply" and "advance" is impossible because they are
-one commit; a replayed refresh re-reads ``max(_source_hi)`` and sees
-the range already applied. Plain row mirrors can rely on per-key merge
-idempotence; aggregate increments cannot, hence the marker.
+The exactly-once refresh protocol, stated once for every CDC-maintained
+view in the engine (this aggregate, the KLL / theta / count-min /
+t-digest sketches of ``operators.sketch``, the row-mapped indexes of
+``operators.dedup`` / ``operators.similarity`` and the micro-batch
+result tables of ``queries_pipeline``):
+
+1. **Watermark.** The applied source version rides *inside the view
+   commit* as a ``_source_hi`` column (:data:`SOURCE_HI`);
+   :func:`stored_watermark` reads it back (-1 before the first
+   commit). There is no separate watermark table.
+2. **Range.** A refresh folds source versions ``(watermark,
+   latest]`` and returns that ``(lo, hi)``; ``lo > hi`` means the view
+   was already current — the replay no-op, which reads no data.
+3. **Probe.** A view that cannot consume every change type asks
+   :func:`probe_change_types` first: ledger metadata answers without
+   a Spark job when it can (append commits carry only inserts),
+   otherwise one probe job does.
+4. **Stamp and commit.** :func:`stamp_commit` stamps every written
+   row with ``hi`` and writes them as ONE ledger commit, so apply and
+   advance are atomic (the same idea as Delta's per-stream
+   ``txnAppId``/``txnVersion`` idempotent-writer markers and
+   Structured Streaming's ``foreachBatch`` batch-id guard). A crash
+   between "apply" and "advance" is impossible; a replayed refresh
+   re-reads the watermark and sees the range already applied. Plain
+   row mirrors can rely on per-key merge idempotence; aggregate
+   increments cannot, hence the marker.
+
+A whole-state view (the aggregate, the sketches) is one fold ``new =
+fold(changes, old_or_None)`` — ``merge(old, sketch(Δ))`` for a
+mergeable summary — run by :func:`refresh_state`; a micro-batch view
+uses the stream's ``batch_id`` as ``hi`` (:func:`fold_stream_batch`,
+``MaterializedLshIndex.fold_batch``). Row-mapped indexes append
+instead of overwriting (:func:`refresh_mapped_index`) and add one
+NULL-id marker row per commit so the watermark advances even when an
+increment maps to no rows.
 
 Scale posture: one refresh shuffles only ``O(|changes| + |touched
 groups|)`` rows on the group keys — the fact table is never rescanned.
@@ -74,12 +101,21 @@ def change_sign():
     Unlike the row-mirror MERGE (which rejects updates by design,
     reference ``design_doc.md:79-81``), aggregate maintenance consumes
     update pre/post images natively: pre −1, post +1 is exactly the
-    sum/count delta of an in-place update.
+    sum/count delta of an in-place update. Any other change type fails
+    the Spark job that evaluates the sign: a silent 0 would drop the
+    row from every sum and count.
     """
     return (
         F.when(F.col(CHANGE_TYPE).isin([CT_INSERT, CT_UPDATE_POST]), F.lit(1))
         .when(F.col(CHANGE_TYPE).isin([CT_DELETE, CT_UPDATE_PRE]), F.lit(-1))
-        .otherwise(F.lit(0))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("unsupported change type in feed: "),
+                    F.coalesce(F.col(CHANGE_TYPE), F.lit("NULL")),
+                )
+            )
+        )
         .cast("long")
     )
 
@@ -134,7 +170,126 @@ def apply_aggregate_delta(
     return untouched.select(*keys, *measure_cols).unionByName(combined)
 
 
-class MaterializedAggregate:
+def stored_watermark(table: VersionedTable) -> int:
+    """``max(_source_hi)`` of a protocol state table, -1 when absent.
+
+    Every protocol commit stamps ALL its rows (markers included) with
+    the just-applied ``hi``, and ``hi`` increases monotonically — so
+    the table-wide max always lives in the LAST commit, and the parquet
+    row-group statistics of that commit's files answer it without a
+    Spark job (``VersionedTable.column_max_footer`` — the same
+    metadata-only read Delta does against its checkpoint; guide §5:
+    driver round-trips). Falls back to the scan+collect when footer
+    stats are unusable. The semantics are unchanged: the watermark is
+    still read from the committed table itself, so apply+advance stay
+    one atomic commit and a fresh process recovers it from storage.
+    A row-mapped index's NULL-id marker rows count here by design:
+    they exist so this scalar always equals the ``hi`` the last
+    refresh returned, even when that refresh mapped to zero index rows
+    (ADVICE r13)."""
+    if not table.exists():
+        return -1
+    hi = table.column_max_footer(SOURCE_HI)
+    if hi is not None:
+        return int(hi)
+    row = table.read().agg(F.max(SOURCE_HI).alias("hi")).collect()[0]
+    return -1 if row["hi"] is None else int(row["hi"])
+
+
+def probe_change_types(
+    source,
+    lo: int,
+    hi: int,
+    changes: DataFrame,
+    allowed: Sequence[str] = (CT_INSERT,),
+    error: str | None = None,
+) -> bool:
+    """Whether every row of ``changes`` — ``source``'s feed of versions
+    ``[lo, hi]`` — has a change type in ``allowed``. Ledger metadata
+    (``VersionedTable.changes_insert_only``) answers without a Spark
+    job when it can; otherwise one probe job reads the feed. With
+    ``error`` set, a False answer raises ``ValueError`` with that
+    message and the offending types instead."""
+    offending = changes.where(~F.col(CHANGE_TYPE).isin(*allowed))
+    # metadata says "inserts only" (True), "has removals" (False) or
+    # cannot tell (None); False settles only an inserts-only check
+    ok = getattr(source, "changes_insert_only", lambda *_: None)(lo, hi)
+    if ok is None or (ok is False and set(allowed) != {CT_INSERT}):
+        ok = offending.isEmpty()
+    if ok or error is None:
+        return ok
+    bad = sorted(r[0] for r in offending.select(CHANGE_TYPE).distinct().collect())
+    raise ValueError(f"{error}; offending change types: {bad}")
+
+
+def stamp_commit(
+    table: VersionedTable,
+    rows: DataFrame,
+    hi: int,
+    mode: str = "overwrite",
+    marker_id: str | None = None,
+) -> int:
+    """Stamp ``rows`` with ``_source_hi = hi`` and write them as one
+    ``table`` commit — the atomic apply+advance. ``mode="append"``
+    creates the table on its first commit. With ``marker_id`` set
+    (row-mapped indexes) one NULL-id marker row (:func:`_marker_row`)
+    rides along, so the watermark advances even when ``rows`` is
+    empty."""
+    rows = rows.withColumn(SOURCE_HI, F.lit(hi).cast("long"))
+    if marker_id is not None:
+        rows = rows.unionByName(_marker_row(rows, marker_id, hi))
+    if not table.exists():
+        mode = "overwrite"
+    return table.write(rows, mode=mode)
+
+
+def fold_commit(table: VersionedTable, changes: DataFrame, hi: int, fold) -> None:
+    """Overwrite ``table`` with ``fold(changes, old)`` stamped at ``hi``;
+    ``old`` is the current state without its watermark column, None
+    before the first commit."""
+    old = table.read().drop(SOURCE_HI) if table.exists() else None
+    stamp_commit(table, fold(changes, old), hi)
+
+
+def refresh_state(
+    table: VersionedTable,
+    source: VersionedTable,
+    fold,
+    error: str | None = None,
+    allowed: Sequence[str] = (CT_INSERT,),
+) -> tuple[int, int]:
+    """Fold ``source`` versions ``(applied_hi, latest]`` into the
+    whole-state view ``table`` (module docstring: the protocol).
+    Returns the ``(lo, hi)`` range applied (lo > hi means the view was
+    already current — the replay no-op path). ``fold(changes, old)``
+    returns the new state; ``old`` is None on the first build. With
+    ``error`` set, a feed carrying a change type outside ``allowed``
+    raises it (:func:`probe_change_types`) before anything commits."""
+    lo = stored_watermark(table) + 1
+    hi = source.latest_version()
+    if lo > hi:
+        return lo, hi
+    changes = source.read_changes(lo, hi)
+    if error is not None:
+        probe_change_types(source, lo, hi, changes, allowed, error)
+    fold_commit(table, changes, hi, fold)
+    return lo, hi
+
+
+class StateView:
+    """What every CDC-maintained view shares: a ledger ``table`` whose
+    commits carry their own watermark."""
+
+    table: VersionedTable
+
+    def applied_hi(self) -> int:
+        """Highest source version already folded into the view — read
+        from the view itself (metadata-sized scalar), so apply+advance
+        are one atomic commit."""
+        return stored_watermark(self.table)
+
+
+class MaterializedAggregate(StateView):
     """A versioned gold table holding ``GROUP BY group_keys`` sums,
     refreshed incrementally from a versioned source's change feed."""
 
@@ -152,16 +307,24 @@ class MaterializedAggregate:
         self.sum_measures = dict(sum_measures)
         self.scale = scale
 
-    def applied_hi(self) -> int:
-        """Highest source version already folded into the view — read
-        from the view itself (metadata-sized scalar aggregate), so
-        apply+advance are one atomic commit."""
-        return stored_watermark(self.table)
+    def fold(self, changes: DataFrame, old: DataFrame | None) -> DataFrame:
+        """``old ⊕ delta(changes)``; touched groups are replaced,
+        vanished groups dropped. (A real Delta binding would use MERGE
+        + txn markers; the ledger's overwrite gives the same atomicity
+        for a view-sized table.)"""
+        delta = aggregate_delta(
+            changes, self.group_keys, self.sum_measures, self.scale
+        )
+        if old is None:
+            return delta.where(F.col(COUNT_COL) > 0)
+        return apply_aggregate_delta(old, delta, self.group_keys)
 
     def refresh(self, source: VersionedTable, transform=None) -> tuple[int, int]:
         """Fold ``source`` versions ``(applied_hi, latest]`` into the
         view. Returns the ``(lo, hi)`` range applied (lo > hi means the
-        view was already current — the replay no-op path).
+        view was already current — the replay no-op path). A change
+        type outside the four CDC kinds fails the fold's own Spark job
+        (:func:`change_sign`), so nothing commits.
 
         ``transform`` (optional) maps the raw change feed before the
         delta aggregate — the *join-view maintenance* seam: a fact-CDC
@@ -174,72 +337,18 @@ class MaterializedAggregate:
         dimension needs bitemporal deltas — out of scope, recompute).
         Reserved CDC columns must survive the transform (they do for
         joins/projections that keep them)."""
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        if transform is not None:
-            changes = transform(changes)
-        delta = aggregate_delta(
-            changes, self.group_keys, self.sum_measures, self.scale
+        if transform is None:
+            return refresh_state(self.table, source, self.fold)
+        return refresh_state(
+            self.table, source, lambda ch, old: self.fold(transform(ch), old)
         )
-        if not self.table.exists():
-            first = delta.where(F.col(COUNT_COL) > 0).withColumn(
-                SOURCE_HI, F.lit(hi).cast("long")
-            )
-            self.table.write(first, mode="overwrite")
-            return lo, hi
-        old = self.table.read()
-        new_state = apply_aggregate_delta(
-            old.drop(SOURCE_HI), delta, self.group_keys
-        ).withColumn(SOURCE_HI, F.lit(hi).cast("long"))
-        # Touched groups are replaced, vanished groups dropped — the
-        # overwrite commit is the atomic apply+advance. (A real Delta
-        # binding would use MERGE + txn markers; the ledger's overwrite
-        # gives the same atomicity for a view-sized table.)
-        self.table.write(new_state, mode="overwrite")
-        return lo, hi
-
-
-def stored_watermark(table: VersionedTable) -> int:
-    """``max(_source_hi)`` of a protocol state table, -1 when absent.
-
-    Every protocol commit stamps ALL its rows (markers included) with
-    the just-applied ``hi``, and ``hi`` increases monotonically — so
-    the table-wide max always lives in the LAST commit, and the parquet
-    row-group statistics of that commit's files answer it without a
-    Spark job (``VersionedTable.column_max_footer`` — the same
-    metadata-only read Delta does against its checkpoint; guide §5:
-    driver round-trips). Falls back to the scan+collect when footer
-    stats are unusable. The semantics are unchanged: the watermark is
-    still read from the committed table itself, so apply+advance stay
-    one atomic commit and a fresh process recovers it from storage."""
-    if not table.exists():
-        return -1
-    hi = table.column_max_footer(SOURCE_HI)
-    if hi is not None:
-        return int(hi)
-    row = table.read().agg(F.max(SOURCE_HI).alias("hi")).collect()[0]
-    return -1 if row["hi"] is None else int(row["hi"])
-
-
-def mapped_index_applied_hi(table: VersionedTable) -> int:
-    """Highest source version folded into a row-mapped index — read
-    from the index itself (metadata-sized scalar aggregate), so
-    apply+advance stay one atomic commit. -1 for a not-yet-built
-    index. Watermark MARKER rows (id NULL — see
-    :func:`refresh_mapped_index`) count here by design: they exist so
-    this scalar always equals the ``hi`` the last refresh returned,
-    even when that refresh mapped to zero index rows (ADVICE r13)."""
-    return stored_watermark(table)
 
 
 def _marker_row(template: DataFrame, id_col: str, hi: int) -> DataFrame:
     """One watermark marker row in ``template``'s schema: every data
     column NULL (``id_col`` included; the tombstone flag, when present,
     is true so BOTH read filters drop it), ``_source_hi = hi``. Unioned
-    into every index commit so ``mapped_index_applied_hi`` always
+    into every index commit so :func:`stored_watermark` always
     advances with the returned ``hi`` — a refresh whose increment maps
     to zero index rows (all-empty-shingle docs; an empty change feed
     over ledger versions that committed no rows) previously left the
@@ -303,7 +412,7 @@ def compact_mapped_index(
     fraction of raw rows is invisible (tombstones, superseded
     generations, markers) — the caller's threshold knob. Returns
     whether a rewrite happened."""
-    hi = mapped_index_applied_hi(table)
+    hi = stored_watermark(table)
     if hi < 0:
         return False
     resolved = read_mapped_index(table, id_col).drop(SOURCE_HI)
@@ -319,11 +428,10 @@ def compact_mapped_index(
             live = resolved.count()
             if raw == 0 or (raw - live) / raw < min_stale_fraction:
                 return False
-        out = resolved.withColumn(TOMBSTONE, F.lit(False)).withColumn(
-            SOURCE_HI, F.lit(hi).cast("long")
+        version = stamp_commit(
+            table, resolved.withColumn(TOMBSTONE, F.lit(False)), hi,
+            marker_id=id_col,
         )
-        out = out.unionByName(_marker_row(out, id_col, hi))
-        version = table.write(out, mode="overwrite")
         # Tag AFTER the commit: a crash in between just costs readers
         # the window until the next compaction (see COMPACTED_TAG).
         table.set_tag(COMPACTED_TAG, version)
@@ -375,9 +483,7 @@ def refresh_mapped_index(
       to no shingles) has no fresh rows to outrank its old generation
       — the tombstone is what hides it.
 
-    The applied version rides inside the index commit as
-    ``_source_hi`` (exactly-once, same marker as
-    :class:`MaterializedAggregate`), and every commit carries one
+    Exactly-once as in the module docstring; every commit carries one
     NULL-id watermark marker row (:func:`_marker_row`) so the stored
     watermark always advances with the returned ``hi`` — including
     increments that map to zero index rows (ADVICE r13). Consumers
@@ -399,35 +505,23 @@ def refresh_mapped_index(
     if deletes not in ("rewrite", "tombstone"):
         raise ValueError(f"unsupported deletes mode {deletes!r}")
     tomb = deletes == "tombstone"
-    lo = mapped_index_applied_hi(table) + 1
+    lo = stored_watermark(table) + 1
     hi = source.latest_version()
     if lo > hi:
         return lo, hi
 
-    def _stamp(rows: DataFrame, tombstone_col=None) -> DataFrame:
-        if tomb:
-            rows = rows.withColumn(
-                TOMBSTONE,
-                F.lit(False) if tombstone_col is None else tombstone_col,
-            )
-        rows = rows.withColumn(SOURCE_HI, F.lit(hi).cast("long"))
-        return rows.unionByName(_marker_row(rows, id_col, hi))
+    def _stamp(rows: DataFrame, mode: str) -> None:
+        if tomb and TOMBSTONE not in rows.columns:
+            rows = rows.withColumn(TOMBSTONE, F.lit(False))
+        stamp_commit(table, rows, hi, mode, marker_id=id_col)
 
     changes = source.read_changes(lo, hi)
     insert_like = F.col(CHANGE_TYPE).isin([CT_INSERT, CT_UPDATE_POST])
-    remove_like = F.col(CHANGE_TYPE).isin([CT_DELETE, CT_UPDATE_PRE])
     cols = [id_col, *input_cols]
-    # commit modes often decide insert-only without a probe job
-    ins_only = source.changes_insert_only(lo, hi)
-    if ins_only is None:
-        ins_only = changes.where(remove_like).isEmpty()
-    if ins_only:
-        if precomputed is not None:
-            new_rows = _stamp(precomputed)
-        else:
-            ins = changes.where(insert_like).select(*cols)
-            new_rows = _stamp(row_fn(ins))
-        table.write(new_rows, mode="append" if table.exists() else "overwrite")
+    if probe_change_types(source, lo, hi, changes):
+        if precomputed is None:
+            precomputed = row_fn(changes.where(insert_like).select(*cols))
+        _stamp(precomputed, "append")
         return lo, hi
     from .merge import COMMIT_VERSION
 
@@ -456,13 +550,12 @@ def refresh_mapped_index(
                 tombstones = tombstones.withColumn(
                     c, F.lit(None).cast(new_rows.schema[c].dataType)
                 )
-        out = _stamp(
+        _stamp(
             tombstones.select(*new_rows.columns).withColumn(
-                "_is_tomb", F.lit(True)
-            ).unionByName(new_rows.withColumn("_is_tomb", F.lit(False))),
-            tombstone_col=F.col("_is_tomb"),
-        ).drop("_is_tomb")
-        table.write(out, mode="append")
+                TOMBSTONE, F.lit(True)
+            ).unionByName(new_rows.withColumn(TOMBSTONE, F.lit(False))),
+            "append",
+        )
         return lo, hi
     if table.exists():
         kept = (
@@ -472,7 +565,7 @@ def refresh_mapped_index(
             .join(changed_ids, id_col, "left_anti")
         )
         new_rows = kept.unionByName(new_rows)
-    table.write(_stamp(new_rows), mode="overwrite")
+    _stamp(new_rows, "overwrite")
     return lo, hi
 
 
@@ -492,18 +585,7 @@ def fold_stream_batch(
         return False
     if CHANGE_TYPE not in batch.columns:
         batch = batch.withColumn(CHANGE_TYPE, F.lit(CT_INSERT))
-    delta = aggregate_delta(batch, view.group_keys, view.sum_measures, view.scale)
-    if not view.table.exists():
-        first = delta.where(F.col(COUNT_COL) > 0).withColumn(
-            SOURCE_HI, F.lit(batch_id).cast("long")
-        )
-        view.table.write(first, mode="overwrite")
-        return True
-    old = view.table.read()
-    new_state = apply_aggregate_delta(
-        old.drop(SOURCE_HI), delta, view.group_keys
-    ).withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
-    view.table.write(new_state, mode="overwrite")
+    fold_commit(view.table, batch, batch_id, view.fold)
     return True
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .matview import StateView
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -512,7 +514,7 @@ def ivf_assign(
     )
 
 
-class MaterializedIvfIndex:
+class MaterializedIvfIndex(StateView):
     """CDC-maintained IVF assignment index — the EMBEDDING-side sibling
     of ``operators.dedup.MaterializedLshIndex`` (VERDICT r12 #1's
     deployment shape applied to the ANN family): centroids are FROZEN
@@ -555,11 +557,6 @@ class MaterializedIvfIndex:
             vecs, self.centroids, self.id_col, self.vec_col,
             arrow=self.arrow,
         )
-
-    def applied_hi(self) -> int:
-        from .matview import mapped_index_applied_hi
-
-        return mapped_index_applied_hi(self.table)
 
     def refresh(self, source, deletes: str = "rewrite") -> tuple[int, int]:
         from .matview import refresh_mapped_index

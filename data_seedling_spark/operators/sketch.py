@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..session import sql_conf
+from .matview import StateView, change_sign, refresh_state
+from .merge import CT_DELETE, CT_INSERT, CT_UPDATE_POST, CT_UPDATE_PRE
 
 
 def _md5_long(col):
@@ -285,16 +287,14 @@ def kll_quantiles(sketch: DataFrame, probs: list[float]) -> DataFrame:
     )
 
 
-class MaterializedSketch:
+class MaterializedSketch(StateView):
     """A versioned KLL survivor frame kept current from a versioned
     source's change feed — the sketch-as-matview composition
     (streaming/decayed percentile feeds without ever rescanning the
     fact table).
 
-    Protocol mirrors :class:`operators.matview.MaterializedAggregate`:
-    the applied source version rides *inside* the sketch commit as
-    ``_source_hi``, so apply+advance are one atomic write and a
-    replayed refresh is a no-op. Each refresh sketches ONLY the
+    Exactly-once refresh: the protocol in ``operators.matview``'s
+    module docstring. Each refresh sketches ONLY the
     increment (``inc_rounds`` compactions over O(changes) rows), then
     merges it into the stored survivors with ``merge_rounds`` more
     compactions — KLL's same-level buffer merge, identical to
@@ -310,8 +310,6 @@ class MaterializedSketch:
     replay create/append/merge commit-by-commit and hash-match the
     quantile estimates exactly.
     """
-
-    SOURCE_HI = "_source_hi"
 
     def __init__(
         self,
@@ -331,34 +329,7 @@ class MaterializedSketch:
         self.merge_rounds = merge_rounds
         self.bucket_width = bucket_width
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
-    def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
-
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedSketch is insert-only: rank sketches have "
-                "no delete inverse — recompute instead"
-            )
+    def fold(self, changes: DataFrame, old: DataFrame | None) -> DataFrame:
         inc = kll_sketch(
             changes,
             self.value_col,
@@ -366,27 +337,28 @@ class MaterializedSketch:
             rounds=self.inc_rounds,
             bucket_width=self.bucket_width,
         )
-        if self.table.exists():
-            merged = kll_bucketed(
-                self.table.read().select("v", "id", "w").unionByName(inc),
-                "v",
-                self.bucket_width,
-            )
-            # same one-shuffle loop shape as kll_sketch (r15)
-            with _carried_partitioning(self.spark):
-                for _ in range(self.merge_rounds):
-                    merged = kll_compact_round(
-                        merged, "v", "id", "w",
-                        bucket_width=self.bucket_width,
-                    ).localCheckpoint()
-            state = merged.drop("_rb")
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
+        if old is None:
+            return inc
+        merged = kll_bucketed(
+            old.select("v", "id", "w").unionByName(inc), "v", self.bucket_width
         )
-        return lo, hi
+        # same one-shuffle loop shape as kll_sketch (r15)
+        with _carried_partitioning(self.spark):
+            for _ in range(self.merge_rounds):
+                merged = kll_compact_round(
+                    merged, "v", "id", "w",
+                    bucket_width=self.bucket_width,
+                ).localCheckpoint()
+        return merged.drop("_rb")
+
+    def refresh(self, source) -> tuple[int, int]:
+        """Fold source versions ``(applied_hi, latest]``; returns the
+        applied ``(lo, hi)`` (lo > hi = already current)."""
+        return refresh_state(
+            self.table, source, self.fold,
+            "MaterializedSketch is insert-only: rank sketches have "
+            "no delete inverse — recompute instead",
+        )
 
     def quantiles(self, probs: list[float]) -> DataFrame:
         return kll_quantiles(
@@ -641,7 +613,7 @@ def theta_intersection_estimate(
     )
 
 
-class MaterializedThetaSketch:
+class MaterializedThetaSketch(StateView):
     """A versioned k-row theta sketch kept current from a versioned
     source's change feed — distinct-count-as-matview, the theta twin
     of :class:`MaterializedSketch`.
@@ -654,14 +626,10 @@ class MaterializedThetaSketch:
     protocol against one plain full-corpus SQL sketch (no unrolled
     replay needed, unlike KLL's round-by-round coin schedule).
 
-    Protocol mirrors ``MaterializedSketch``: the applied source
-    version rides inside the sketch commit as ``_source_hi`` so
-    apply+advance are atomic and a replayed refresh is a no-op.
-    Insert-only (theta sketches have no delete inverse); a
-    delete/update in the feed raises and the caller recomputes.
-    Refresh cost is O(|increment|) + a k-row merge."""
-
-    SOURCE_HI = "_source_hi"
+    Exactly-once refresh: the protocol in ``operators.matview``'s
+    module docstring. Insert-only (theta sketches have no delete
+    inverse); a delete/update in the feed raises and the caller
+    recomputes. Refresh cost is O(|increment|) + a k-row merge."""
 
     def __init__(self, spark, table, key_col: str, k: int = 64):
         self.spark = spark
@@ -669,52 +637,24 @@ class MaterializedThetaSketch:
         self.key_col = key_col
         self.k = k
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
+    def fold(self, changes: DataFrame, old: DataFrame | None) -> DataFrame:
+        inc = theta_sketch(changes, self.key_col, self.k)
+        return inc if old is None else theta_union(old.select("h"), inc, k=self.k)
 
     def refresh(self, source) -> tuple[int, int]:
         """Fold source versions ``(applied_hi, latest]``; returns the
         applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
-
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
+        return refresh_state(
+            self.table, source, self.fold,
+            "MaterializedThetaSketch is insert-only: KMV retention "
+            "has no delete inverse — recompute instead",
         )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedThetaSketch is insert-only: KMV retention "
-                "has no delete inverse — recompute instead"
-            )
-        inc = theta_sketch(changes, self.key_col, self.k)
-        if self.table.exists():
-            state = theta_union(
-                self.table.read().select("h"), inc, k=self.k
-            )
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
-        )
-        return lo, hi
 
     def stats(self) -> DataFrame:
         return theta_stats(self.table.read().select("h"), self.k)
 
 
-class MaterializedCountMin:
+class MaterializedCountMin(StateView):
     """A versioned count-min counter grid kept current from a
     versioned source's change feed — frequency-as-matview, completing
     the sketch-maintenance family: KLL (quantiles) and theta
@@ -729,8 +669,6 @@ class MaterializedCountMin:
     (``md5(d ':' key)``), the same grid ``count_min_estimates``
     builds. Refresh cost is O(|changes| × depth) fixed-width rows plus
     a (d × width)-bounded merge."""
-
-    SOURCE_HI = "_source_hi"
 
     def __init__(self, spark, table, key_col: str, depth: int = 4, width: int = 256):
         self.spark = spark
@@ -775,73 +713,27 @@ class MaterializedCountMin:
             .agg(F.sum("_s").alias("c"))
         )
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
-    def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import (
-            CHANGE_TYPE,
-            CT_DELETE,
-            CT_INSERT,
-            CT_UPDATE_POST,
-            CT_UPDATE_PRE,
-        )
-
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # A NULL sign would be dropped by F.sum and silently corrupt
-        # the maintained counters — fail loudly on change types outside
-        # the four CDC kinds instead, matching the KLL/theta
-        # maintainers' contract (r8 ADVICE).
-        known = (CT_INSERT, CT_UPDATE_POST, CT_DELETE, CT_UPDATE_PRE)
-        # append-only ranges provably carry CT_INSERT rows alone —
-        # the unknown-type probe job is needed only for data-dependent
-        # (merge/update/overwrite) feeds
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        unknown = changes.where(~F.col(CHANGE_TYPE).isin(*known))
-        if _ins_only is not True and unknown.limit(1).count() > 0:
-            bad = sorted(
-                r[0]
-                for r in unknown.select(CHANGE_TYPE).distinct().collect()
-            )
-            raise ValueError(
-                "MaterializedCountMin.refresh: unsupported change types "
-                f"in feed: {bad} (known: {list(known)})"
-            )
-        sign = (
-            F.when(F.col(CHANGE_TYPE).isin(CT_INSERT, CT_UPDATE_POST), F.lit(1))
-            .when(F.col(CHANGE_TYPE).isin(CT_DELETE, CT_UPDATE_PRE), F.lit(-1))
-        )
-        delta = self._bucketed(
-            changes.withColumn("_sgn", sign), F.col("_sgn")
-        )
-        if self.table.exists():
+    def fold(self, changes: DataFrame, old: DataFrame | None) -> DataFrame:
+        state = self._bucketed(changes, change_sign())
+        if old is not None:
             state = (
-                self.table.read()
-                .select("d", "bucket", "c")
-                .unionByName(delta)
+                old.select("d", "bucket", "c")
+                .unionByName(state)
                 .groupBy("d", "bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        else:
-            state = delta
-        self.table.write(
-            state.where(F.col("c") != 0).withColumn(
-                self.SOURCE_HI, F.lit(hi).cast("long")
-            ),
-            mode="overwrite",
+        return state.where(F.col("c") != 0)
+
+    def refresh(self, source) -> tuple[int, int]:
+        """Fold source versions ``(applied_hi, latest]``; returns the
+        applied ``(lo, hi)`` (lo > hi = already current). A change type
+        outside the four CDC kinds raises instead of corrupting the
+        counters (r8 ADVICE)."""
+        return refresh_state(
+            self.table, source, self.fold,
+            "MaterializedCountMin.refresh: unsupported change types",
+            allowed=(CT_INSERT, CT_UPDATE_POST, CT_DELETE, CT_UPDATE_PRE),
         )
-        return lo, hi
 
     def estimates(self, keys: DataFrame, key_col: str) -> DataFrame:
         """Point-frequency estimates for a key frame: min over the d
@@ -1087,16 +979,14 @@ def tdigest_quantiles(centroids: DataFrame, probs: list[float]) -> DataFrame:
     return sel.select("prob", F.round(est, 6).alias("est"), "total_weight")
 
 
-class MaterializedTDigest:
+class MaterializedTDigest(StateView):
     """A versioned t-digest centroid frame kept current from a
     versioned source's change feed — the interpolated-quantile twin of
     :class:`MaterializedSketch` (KLL), so BOTH quantile families now
     maintain incrementally (r9 verdict #8).
 
-    Protocol mirrors ``MaterializedSketch``: the applied source
-    version rides *inside* the centroid commit as ``_source_hi``, so
-    apply+advance are one atomic write and a replayed refresh is a
-    no-op. Each refresh digests ONLY the increment
+    Exactly-once refresh: the protocol in ``operators.matview``'s
+    module docstring. Each refresh digests ONLY the increment
     (:func:`tdigest_centroids` over O(changes) rows —
     cardinality-bounded after the first groupBy) and folds it into the
     stored centroids with Dunning's centroid merge: re-digest the
@@ -1114,8 +1004,6 @@ class MaterializedTDigest:
     quantiles hash-match exactly (``incremental_tdigest_maintenance``).
     """
 
-    SOURCE_HI = "_source_hi"
-
     def __init__(
         self,
         spark,
@@ -1130,54 +1018,27 @@ class MaterializedTDigest:
         self.delta = delta
         self.value_scale = value_scale
 
-    def applied_hi(self) -> int:
-        # footer-stats watermark read with scan fallback (matview)
-        from .matview import stored_watermark
-
-        return stored_watermark(self.table)
-
-    def refresh(self, source) -> tuple[int, int]:
-        """Fold source versions ``(applied_hi, latest]``; returns the
-        applied ``(lo, hi)`` (lo > hi = already current)."""
-        from .merge import CHANGE_TYPE, CT_INSERT
-
-        lo = self.applied_hi() + 1
-        hi = source.latest_version()
-        if lo > hi:
-            return lo, hi
-        changes = source.read_changes(lo, hi)
-        # ledger commit modes usually prove insert-only without a
-        # probe job (append commits emit only CT_INSERT rows)
-        _ins_only = getattr(source, "changes_insert_only", lambda *_: None)(
-            lo, hi
-        )
-        if _ins_only is not True and (
-            changes.where(F.col(CHANGE_TYPE) != CT_INSERT).limit(1).count() > 0
-        ):
-            raise ValueError(
-                "MaterializedTDigest is insert-only: centroids have "
-                "no delete inverse — recompute instead"
-            )
+    def fold(self, changes: DataFrame, old: DataFrame | None) -> DataFrame:
         inc = tdigest_centroids(
             changes, self.value_col, delta=self.delta,
             value_scale=self.value_scale,
         )
-        if self.table.exists():
-            merged = (
-                self.table.read().select("mean", "n_c")
-                .unionByName(inc.select("mean", "n_c"))
-            )
-            state = tdigest_centroids(
-                merged, "mean", delta=self.delta, value_scale=6,
-                weight_col="n_c", assume_bounded=True,  # <= 2*delta rows
-            )
-        else:
-            state = inc
-        self.table.write(
-            state.withColumn(self.SOURCE_HI, F.lit(hi).cast("long")),
-            mode="overwrite",
+        if old is None:
+            return inc
+        return tdigest_centroids(
+            old.select("mean", "n_c").unionByName(inc.select("mean", "n_c")),
+            "mean", delta=self.delta, value_scale=6,
+            weight_col="n_c", assume_bounded=True,  # <= 2*delta rows
         )
-        return lo, hi
+
+    def refresh(self, source) -> tuple[int, int]:
+        """Fold source versions ``(applied_hi, latest]``; returns the
+        applied ``(lo, hi)`` (lo > hi = already current)."""
+        return refresh_state(
+            self.table, source, self.fold,
+            "MaterializedTDigest is insert-only: centroids have "
+            "no delete inverse — recompute instead",
+        )
 
     def quantiles(self, probs: list[float]) -> DataFrame:
         return tdigest_quantiles(

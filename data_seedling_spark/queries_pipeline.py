@@ -929,18 +929,15 @@ def _fold_emit_neardup_batch(index, corpus, pairs_tbl, batch, batch_id) -> bool:
     on the batch split — the capped variant lives in the maintained
     batch query (``minhash_lsh_index_maintenance``)."""
     from .operators.dedup import jaccard, word_shingles
-    from .operators.matview import SOURCE_HI, mapped_index_applied_hi
+    from .operators.matview import stamp_commit, stored_watermark
 
     batch = batch.select("doc_id", "text")
     folded = index.fold_batch(batch, batch_id)
     did_work = folded
-    if mapped_index_applied_hi(corpus) < batch_id:
-        corpus.write(
-            batch.withColumn(SOURCE_HI, F.lit(batch_id).cast("long")),
-            mode="append" if corpus.exists() else "overwrite",
-        )
+    if stored_watermark(corpus) < batch_id:
+        stamp_commit(corpus, batch, batch_id, "append")
         did_work = True
-    if mapped_index_applied_hi(pairs_tbl) >= batch_id:
+    if stored_watermark(pairs_tbl) >= batch_id:
         return did_work
     cands = index.new_vs_all_candidates(
         batch.select("doc_id"), bucket_cap=None
@@ -972,10 +969,7 @@ def _fold_emit_neardup_batch(index, corpus, pairs_tbl, batch, batch_id) -> bool:
         )
         .where(F.col("jaccard") >= 0.8)
     )
-    pairs_tbl.write(
-        verified.withColumn(SOURCE_HI, F.lit(batch_id).cast("long")),
-        mode="append" if pairs_tbl.exists() else "overwrite",
-    )
+    stamp_commit(pairs_tbl, verified, batch_id, "append")
     return True
 
 
@@ -1531,7 +1525,7 @@ def streaming_decontamination_ingest(
     import uuid as _uuid
 
     from .operators.dedup import MaterializedNgramIndex, scale_out
-    from .operators.matview import SOURCE_HI, mapped_index_applied_hi
+    from .operators.matview import stamp_commit, stored_watermark
     from .operators.sampling import hash_bucket
     from .streaming.windows import read_events_stream, require_stream_progress
 
@@ -1561,7 +1555,7 @@ def streaming_decontamination_ingest(
         # Idempotent-replay guard on the RESULTS ledger itself (the
         # fold_batch pattern): the applied batch id rides inside the
         # commit as _source_hi.
-        if batch_id <= mapped_index_applied_hi(results):
+        if batch_id <= stored_watermark(results):
             return
         occ = (
             scale_out(batch.where(split == "holdout"))
@@ -1601,11 +1595,8 @@ def streaming_decontamination_ingest(
                     4,
                 ).alias("contaminated_frac"),
             )
-            .withColumn(SOURCE_HI, F.lit(batch_id).cast("long"))
         )
-        results.write(
-            report, mode="append" if results.exists() else "overwrite"
-        )
+        stamp_commit(results, report, batch_id, "append")
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = read_events_stream(
@@ -2178,7 +2169,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the aggregate from the net final state; the
     incremental path must land on exactly the same decimal sums.
     """
-    from .operators.matview import COUNT_COL, SOURCE_HI, MaterializedAggregate
+    from .operators.matview import COUNT_COL, MaterializedAggregate
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     orders = load_table(spark, sf_dir, "orders").select(*_ORDER_COLS)
@@ -2803,7 +2794,7 @@ def incremental_lm_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     generators, not just joins/projections. v0 creates the corpus
     minus ≡3 (mod 4); a merge then deletes ≡1 (mod 8) and inserts
     ≡3 (mod 4); one refresh folds each commit's increment."""
-    from .operators.matview import COUNT_COL, SOURCE_HI, MaterializedAggregate
+    from .operators.matview import COUNT_COL, MaterializedAggregate
     from .operators.merge import CHANGE_TYPE, CT_DELETE, CT_INSERT
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -163,3 +163,49 @@ def test_calibration_baseline_well_formed():
     }
     for v in base.values():
         assert isinstance(v, (int, float)) and v > 0
+
+
+def _hand_stamps(package: str) -> list[str]:
+    """``withColumn(SOURCE_HI | "_source_hi", ...)`` calls in
+    ``package`` outside ``operators/matview.py``, as ``path:line``."""
+    import ast
+
+    def names_marker(node) -> bool:
+        if isinstance(node, ast.Constant):
+            return node.value == "_source_hi"
+        if isinstance(node, ast.Name):
+            return node.id == "SOURCE_HI"
+        return isinstance(node, ast.Attribute) and node.attr == "SOURCE_HI"
+
+    hits = []
+    for root, _, files in os.walk(package):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, os.path.dirname(package))
+            if not name.endswith(".py") or rel == os.path.join(
+                "data_seedling_spark", "operators", "matview.py"
+            ):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            hits += [
+                f"{rel}:{node.lineno}"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "withColumn"
+                and node.args
+                and names_marker(node.args[0])
+            ]
+    return sorted(hits)
+
+
+def test_views_stamp_watermarks_through_matview():
+    """The exactly-once protocol has one stamp-and-commit step,
+    ``matview.stamp_commit``: a view that stamps ``_source_hi`` by hand
+    can drift from it (mode, marker row, atomicity) unnoticed."""
+    hits = _hand_stamps(os.path.join(REPO, "data_seedling_spark"))
+    assert hits == [], (
+        f"_source_hi stamped outside operators/matview.py: {hits}; "
+        "commit through matview.stamp_commit / refresh_state"
+    )

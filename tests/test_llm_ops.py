@@ -3197,7 +3197,7 @@ def test_mapped_index_compaction_preserves_content_and_watermark(spark, tmp_path
     from data_seedling_spark.operators.ledger import VersionedTable
     from data_seedling_spark.operators.matview import (
         compact_mapped_index,
-        mapped_index_applied_hi,
+        stored_watermark,
     )
     from data_seedling_spark.operators.merge import CHANGE_TYPE, CT_DELETE
 
@@ -3219,7 +3219,7 @@ def test_mapped_index_compaction_preserves_content_and_watermark(spark, tmp_path
     assert compact_mapped_index(idx.table, "doc_id", min_stale_fraction=0.05)
     after = {(r["doc_id"], r["band"], r["bkey"]) for r in idx.read().collect()}
     assert after == before
-    assert mapped_index_applied_hi(idx.table) == 1
+    assert stored_watermark(idx.table) == 1
     assert idx.table.read().count() < raw_before
     # already compact: below the stale threshold, no rewrite
     assert not compact_mapped_index(idx.table, "doc_id", min_stale_fraction=0.05)

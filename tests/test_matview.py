@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -209,3 +210,41 @@ def test_stream_aggregate_into_matches_batch_and_guards_replay(spark, tmp_path):
         for r in view.table.read().collect()
     }
     assert got2 == expected
+
+
+def test_refresh_raises_on_unknown_change_type(spark, tmp_path):
+    """A change type outside the four CDC kinds must fail the refresh,
+    not fold in with sign 0 (dropped from every sum and count), and
+    nothing may commit: the view keeps its watermark and state. Same
+    contract as the count-min maintainer; the stream fold shares it."""
+    from pyspark.errors import SparkRuntimeException
+
+    from data_seedling_spark.operators.matview import fold_stream_batch
+
+    class BogusSource:
+        def __init__(self, version):
+            self.version = version
+
+        def latest_version(self):
+            return self.version
+
+        def read_changes(self, lo, hi):
+            return change_df(
+                spark, [("a", 1.0, CT_INSERT), ("a", 10.0, "truncate")]
+            )
+
+    view = make_view(spark, tmp_path)
+    with pytest.raises(SparkRuntimeException, match="truncate"):
+        view.refresh(BogusSource(0))
+    assert view.applied_hi() == -1 and not view.table.exists()
+    src = VersionedTable(spark, str(tmp_path / "src"), write_partitions=1)
+    src.write(change_df(spark, [("a", 10.0, CT_INSERT)]).drop(CHANGE_TYPE),
+              mode="overwrite")
+    assert view.refresh(src) == (0, 0)
+    with pytest.raises(SparkRuntimeException, match="truncate"):
+        view.refresh(BogusSource(1))
+    batch = BogusSource(1).read_changes(0, 0)
+    with pytest.raises(SparkRuntimeException, match="truncate"):
+        fold_stream_batch(view, batch, 1)
+    assert view.applied_hi() == 0
+    assert state(view) == {"a": (1, Decimal("10.00"))}
