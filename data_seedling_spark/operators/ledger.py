@@ -21,15 +21,26 @@ Layout::
     table_dir/
       _ledger.json          # ordered commit records
       v00000/*.parquet      # rows written by that commit
-      v00003.changes/       # explicit change rows (merge commits only)
+      v00003.changes/       # explicit change rows (merge/update commits)
+
+A merge whose feed is only inserts of fresh, unique keys commits as an
+``append``: its version dir holds just the feed's rows and it has no
+``.changes`` dir (its change feed is those rows as inserts). Every
+other merge commits the full new snapshot plus its ``.changes`` dir.
 
 The snapshot rule is also read from outside the engine: the benchmark's
 correctness twin (``perfbench/workloads.py`` ``live_commits`` /
 ``read_live``) rebuilds a snapshot as the last non-append commit's dir
-plus every later append, straight from ``_ledger.json``. A layout that
-adds files a read must subtract (key files, tombstones) makes that twin
-count deleted rows, so such a change lands only after the benchmark's
-reader learns the new rule.
+plus every later append, straight from ``_ledger.json``. Insert-only
+merges keep that rule unchanged. A layout that adds files a read must
+subtract (key files, tombstones) makes that twin count deleted rows, so
+such a change lands only after the benchmark's reader learns the new
+rule.
+
+Every dir a commit writes goes through ``tables.write_parquet_dir``,
+which seeds the schema cache with the schema it wrote, and every read
+through ``tables.scan_parquet``, which replays it: no scan of a dir this
+process wrote runs a schema-inference job.
 
 Scale note: this substrate is the *local test double* for Delta/Iceberg
 — the protocol (watermark + change-feed read + idempotent merge) is
@@ -43,6 +54,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 from functools import reduce
@@ -60,21 +72,10 @@ from .merge import (
     apply_change_feed,
     strip_reserved_columns,
 )
+from ..tables import scan_parquet, seed_schema, write_parquet_dir
 
 _LEDGER = "_ledger.json"
 _CLAIMS = "_claims"
-
-#: Inferred parquet schema per committed data/changes directory,
-#: keyed by (path, dir mtime_ns). Commit dirs are immutable once the
-#: ledger entry lands (overwrite/compact/update all write NEW version
-#: dirs; vacuum removes whole dirs, which changes the key), so the
-#: schema inferred on first read can be replayed on every later read
-#: — skipping the driver-side listing + footer-inference pass that
-#: protocol queries otherwise repeat per refresh (guide §5: driver
-#: round-trips). The mtime in the key makes a recreated path (tests'
-#: tmp dirs, rm -rf + rebuild) miss the cache instead of reading a
-#: stale schema.
-_DIR_SCHEMA_CACHE: dict = {}
 
 
 class NoSuchVersionError(ValueError):
@@ -132,6 +133,12 @@ class VersionedTable:
 
     def _shape(self, df: DataFrame) -> DataFrame:
         return df.coalesce(self.write_partitions) if self.write_partitions else df
+
+    def _write_dir(self, df: DataFrame, d: str):
+        """Write ``df`` as the immutable dir ``d`` and return the schema
+        it wrote, seeded for every later scan
+        (:func:`tables.write_parquet_dir`)."""
+        return write_parquet_dir(self._shape(df), d)
 
     # -- ledger bookkeeping -------------------------------------------------
 
@@ -330,17 +337,16 @@ class VersionedTable:
                     continue
                 raise
         try:
-            self._shape(strip_reserved_columns(df)).write.mode("overwrite").parquet(
-                self._version_dir(version)
-            )
+            vdir = self._version_dir(version)
+            schema = self._write_dir(strip_reserved_columns(df), vdir)
             if constraints:
-                self._check_constraints(
-                    self.spark.read.parquet(self._version_dir(version)), constraints
-                )
+                self._check_constraints(scan_parquet(self.spark, vdir), constraints)
             if collect_stats:
                 # Delta-parity: stats land at write time (footer-only
                 # metadata reads), so readers can prune immediately.
                 self.collect_file_stats(version, collect_stats)
+                # the sidecar moved the dir's mtime: seed the new key
+                seed_schema(vdir, schema)
             commits.append(Commit(version, mode, int(time.time() * 1000)))
             self._write_ledger(commits)
         except BaseException:
@@ -371,6 +377,19 @@ class VersionedTable:
         updates rejected) and commit the new snapshot plus the explicit
         change rows for downstream CDF readers.
 
+        The feed is materialised once (the ``.changes`` dir). When every
+        row is an ``insert`` of a key that is unique in the feed and
+        absent from the target, the merge's net effect is the feed
+        itself: it is written as the new version dir and committed as
+        an ``append`` (the ``.changes`` dir is removed), so the commit
+        costs O(changes) and ``read_changes`` reports its rows as
+        inserts, as for any append. Delta's insert-only MERGE likewise
+        writes only the new files. Any other feed commits a ``merge``:
+        the full snapshot from ``apply_change_feed`` plus the change
+        rows. The snapshot rule is the same for both (last non-append
+        commit plus later appends). The insert-only test runs first,
+        so a removal-bearing feed pays one extra job for the decision.
+
         Concurrency (OCC): the version is claimed before the target
         snapshot is read, so the snapshot the feed applies to is the
         claim's immediate predecessor. A claim conflict retries the
@@ -393,23 +412,28 @@ class VersionedTable:
             target = self.read()
             # Write the feed first, then compute the snapshot FROM the
             # written parquet: the (possibly expensive) upstream feed
-            # pipeline executes exactly once — the guard count inside
-            # apply_change_feed and the two anti-joins all read the
-            # materialised copy.
+            # pipeline executes exactly once — the insert-only checks,
+            # the guard count inside apply_change_feed and the two
+            # anti-joins all read the materialised copy.
             feed_cols = [
                 c for c in changes.columns if c in (*target.columns, *RESERVED_COLUMNS)
             ]
-            self._shape(changes.select(*feed_cols)).write.mode("overwrite").parquet(
-                self._changes_dir(version)
-            )
-            materialised = self.spark.read.parquet(self._changes_dir(version))
-            new_snapshot = apply_change_feed(target, materialised, primary_keys)
-            self._shape(new_snapshot).write.mode("overwrite").parquet(
-                self._version_dir(version)
-            )
-            commits.append(
-                Commit(version, "merge", int(time.time() * 1000), has_changes_dir=True)
-            )
+            cdir = self._changes_dir(version)
+            self._write_dir(changes.select(*feed_cols), cdir)
+            materialised = scan_parquet(self.spark, cdir)
+            if _fresh_inserts(target, materialised, primary_keys):
+                self._write_dir(
+                    materialised.select(*target.columns), self._version_dir(version)
+                )
+                shutil.rmtree(cdir)
+                commit = Commit(version, "append", int(time.time() * 1000))
+            else:
+                new_snapshot = apply_change_feed(target, materialised, primary_keys)
+                self._write_dir(new_snapshot, self._version_dir(version))
+                commit = Commit(
+                    version, "merge", int(time.time() * 1000), has_changes_dir=True
+                )
+            commits.append(commit)
             self._write_ledger(commits)
         except BaseException:
             self._release_claim(version)
@@ -451,9 +475,7 @@ class VersionedTable:
                     col_name,
                     F.when(condition, value).otherwise(F.col(col_name)),
                 )
-            self._shape(strip_reserved_columns(updated)).write.mode(
-                "overwrite"
-            ).parquet(self._version_dir(version))
+            self._write_dir(strip_reserved_columns(updated), self._version_dir(version))
             pre = df.where(condition)
             post = pre
             for col_name, value in assignments.items():
@@ -461,9 +483,7 @@ class VersionedTable:
             changes = pre.withColumn(CHANGE_TYPE, F.lit(CT_UPDATE_PRE)).unionByName(
                 post.withColumn(CHANGE_TYPE, F.lit(CT_UPDATE_POST))
             )
-            self._shape(changes).write.mode("overwrite").parquet(
-                self._changes_dir(version)
-            )
+            self._write_dir(changes, self._changes_dir(version))
             commits.append(
                 Commit(
                     version,
@@ -520,22 +540,6 @@ class VersionedTable:
                 base = i
         return commits[base:]
 
-    def _read_parquet_dir(self, d: str) -> DataFrame:
-        """Scan one committed (immutable) parquet dir, replaying the
-        schema inferred on its first read so later reads skip the
-        driver's listing + footer-inference pass (see
-        ``_DIR_SCHEMA_CACHE``)."""
-        try:
-            key = (d, os.stat(d).st_mtime_ns)
-        except OSError:
-            return self.spark.read.parquet(d)
-        schema = _DIR_SCHEMA_CACHE.get(key)
-        if schema is None:
-            df = self.spark.read.parquet(d)
-            _DIR_SCHEMA_CACHE[key] = df.schema
-            return df
-        return self.spark.read.schema(schema).parquet(d)
-
     def read(self, version: int | None = None) -> DataFrame:
         """S1 snapshot scan (optionally time-travel to ``version``).
 
@@ -549,9 +553,7 @@ class VersionedTable:
             raise NoSuchVersionError(
                 f"{self.path}: snapshot {as_of} needs vacuumed version(s) {vacuumed}"
             )
-        dfs = [
-            self._read_parquet_dir(self._commit_data_dir(c)) for c in live
-        ]
+        dfs = [scan_parquet(self.spark, self._commit_data_dir(c)) for c in live]
         # allowMissingColumns: after a mergeSchema append, pre-evolution
         # versions surface NULLs for the added columns (Delta read
         # semantics). Identical-schema unions are unaffected.
@@ -659,7 +661,7 @@ class VersionedTable:
                 )
             ]
             if kept:
-                dfs.append(self.spark.read.parquet(*kept))
+                dfs.append(scan_parquet(self.spark, vdir, files=kept))
         if not dfs:
             return self.empty_like()
         return reduce(
@@ -869,14 +871,14 @@ class VersionedTable:
                 raise NoSuchVersionError(f"{self.path}: version {v} does not exist")
             ts = F.lit(commit.timestamp_ms).cast("long")
             if commit.mode in ("merge", "update"):
-                chg = self._read_parquet_dir(self._changes_dir(v))
+                chg = scan_parquet(self.spark, self._changes_dir(v))
                 parts.append(
                     chg.withColumn(COMMIT_VERSION, F.lit(v).cast("long")).withColumn(
                         COMMIT_TIMESTAMP, ts
                     )
                 )
                 continue
-            rows = self._read_parquet_dir(self._commit_data_dir(commit))
+            rows = scan_parquet(self.spark, self._commit_data_dir(commit))
             if commit.mode == "overwrite" and v > first_version:
                 prev = self.read(version=v - 1)
                 parts.append(
@@ -1028,8 +1030,6 @@ class VersionedTable:
         for c in retained:
             live.update(x.version for x in self._live_versions(c.version))
         removed: list[int] = []
-        import shutil
-
         for c in commits:
             target = self._version_dir(c.version)
             if c.version not in live and os.path.exists(target):
@@ -1135,9 +1135,7 @@ class VersionedTable:
         if self.commits():
             self._validate_schema(df)
         sdir = self._staging_dir(staging_id)
-        self._shape(strip_reserved_columns(df)).write.mode(
-            "overwrite"
-        ).parquet(sdir)
+        self._write_dir(strip_reserved_columns(df), sdir)
         return sdir
 
     def read_staged(self, staging_id: str) -> DataFrame:
@@ -1146,7 +1144,7 @@ class VersionedTable:
         sdir = self._staging_dir(staging_id)
         if not os.path.isdir(sdir):
             raise NoSuchVersionError(f"no staged write {staging_id!r}")
-        return self.spark.read.parquet(sdir)
+        return scan_parquet(self.spark, sdir)
 
     def publish_staged(
         self,
@@ -1185,6 +1183,7 @@ class VersionedTable:
         except BaseException:
             self._release_claim(version)
             raise
+        seed_schema(self._version_dir(version), staged.schema)
         try:
             commits.append(Commit(version, mode, int(time.time() * 1000)))
             self._write_ledger(commits)
@@ -1211,8 +1210,6 @@ class VersionedTable:
     def abort_staged(self, staging_id: str) -> None:
         """WAP abort: drop the staged data; the table was never
         touched."""
-        import shutil
-
         sdir = self._staging_dir(staging_id)
         if os.path.isdir(sdir):
             shutil.rmtree(sdir)
@@ -1281,11 +1278,39 @@ class VersionedTable:
     def drop_branch(self, name: str) -> None:
         """Discard a branch (its local version dirs with it; pointer
         commits never owned main's files)."""
-        import shutil
-
         dest = self._branch_dir(name)
         if os.path.isdir(dest):
             shutil.rmtree(dest)
+
+
+def _fresh_inserts(
+    target: DataFrame, feed: DataFrame, primary_keys: list[str]
+) -> bool:
+    """True when merging ``feed`` into ``target`` only adds the feed's
+    rows: every row is an ``insert`` (one scan of the feed, run first),
+    and its keys are unique in the feed and absent from the target (a
+    broadcast key-only semi-join). Then ``apply_change_feed`` would
+    return target ∪ feed, and the merge can commit the feed as an
+    append. A feed whose columns or types differ from the target's is
+    left to the rewrite path, which owns those errors and coercions."""
+    columns = {f.name: f.dataType for f in feed.schema.fields}
+    if CHANGE_TYPE not in columns or any(
+        columns.get(f.name) != f.dataType for f in target.schema.fields
+    ):
+        return False
+    if not feed.where(~F.col(CHANGE_TYPE).eqNullSafe(CT_INSERT)).isEmpty():
+        return False
+    keys = feed.select(*primary_keys)
+    repeated = (
+        keys.groupBy(*primary_keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > 1)
+        .drop("_n")
+    )
+    present = target.select(*primary_keys).join(
+        F.broadcast(keys), primary_keys, "left_semi"
+    )
+    return repeated.unionByName(present).isEmpty()
 
 
 def _json_stat(v):
@@ -1455,9 +1480,9 @@ class MultiTableTransaction:
                     }
                 )
             for (table, df, mode), e in zip(staged, entries):
-                table._shape(strip_reserved_columns(df)).write.mode(
-                    "overwrite"
-                ).parquet(table._version_dir(e["version"]))
+                table._write_dir(
+                    strip_reserved_columns(df), table._version_dir(e["version"])
+                )
             prepared = self._manifest_path(txn_id, "prepared")
             tmp = prepared + ".tmp"
             with open(tmp, "w") as f:
@@ -1527,8 +1552,6 @@ class MultiTableTransaction:
                     table = VersionedTable(spark, e["path"])
                     vdir = table._version_dir(e["version"])
                     if os.path.isdir(vdir):
-                        import shutil
-
                         shutil.rmtree(vdir)
                     table._release_claim(e["version"])
                 os.remove(os.path.join(txn_dir, name))

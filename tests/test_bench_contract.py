@@ -209,3 +209,64 @@ def test_views_stamp_watermarks_through_matview():
         f"_source_hi stamped outside operators/matview.py: {hits}; "
         "commit through matview.stamp_commit / refresh_state"
     )
+
+
+#: The one parquet write/scan helper pair, in ``tables.py``.
+_PARQUET_HELPERS = ("write_parquet_dir", "scan_parquet")
+
+
+def _unseeded_parquet_io(path: str) -> list[str]:
+    """``….write….parquet(`` calls and schema-less ``….read….parquet(``
+    calls in ``path`` outside the helper pair, as ``line: kind``."""
+    import ast
+
+    def chain(node) -> list[str]:
+        names = []
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    helper_lines = {
+        line
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and node.name in _PARQUET_HELPERS
+        for line in range(node.lineno, node.end_lineno + 1)
+    }
+    hits = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and node.lineno not in helper_lines
+        ):
+            continue
+        names = chain(node.func.value)
+        if "write" in names:
+            hits.append(f"{node.lineno}: write")
+        elif "read" in names and "schema" not in names:
+            hits.append(f"{node.lineno}: schema-less read")
+    return hits
+
+
+def test_ledger_parquet_io_goes_through_the_seeding_helpers():
+    """Every ledger and base-table parquet write goes through
+    ``tables.write_parquet_dir``, which seeds the schema cache, and every
+    scan through ``tables.scan_parquet``, which replays it. A write that
+    skips the helper leaves its dir to a schema-inference job on every
+    first read; a bare scan infers on every call."""
+    pkg = os.path.join(REPO, "data_seedling_spark")
+    hits = {
+        rel: found
+        for rel in ("operators/ledger.py", "tables.py")
+        if (found := _unseeded_parquet_io(os.path.join(pkg, rel)))
+    }
+    assert hits == {}, (
+        f"parquet I/O outside tables.write_parquet_dir / scan_parquet: {hits}"
+    )

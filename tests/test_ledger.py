@@ -4,6 +4,8 @@ insert/delete, update rejection, vacuum no-op)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -1509,3 +1511,198 @@ def test_ledger_torture_branch_wap_update_interleaved(spark, tmp_table_dir):
     for name in _os.listdir(claims_dir):
         assert int(name.split(".")[0]) <= latest
     assert t.clear_stale_claims() != [] or _os.listdir(claims_dir) == []
+
+
+# -- insert-only merges commit as appends ------------------------------------
+
+FEED = "key long, value string, _change_type string"
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_merge_fast_path_equals_apply_change_feed(spark, tmp_path, seed):
+    """Randomised feeds against one target: ``merge``'s snapshot equals
+    ``apply_change_feed(target, feed)`` as a multiset, whichever path
+    the merge took. Only fresh unique inserts commit as an append,
+    whose CDF rows are exactly the feed's inserts; an update row still
+    raises."""
+    import random
+
+    rng = random.Random(seed)
+    base = [(k, f"v{k}") for k in rng.sample(range(100), 12)]
+    present = [k for k, _ in base]
+    absent = [k for k in range(100) if k not in present]
+    fresh = [(k, f"n{k}", CT_INSERT) for k in rng.sample(absent, 6)]
+    repeat = fresh[rng.randrange(len(fresh))][0]
+    feeds = {
+        "fresh": fresh,
+        "duplicate": fresh + [(repeat, "again", CT_INSERT)],
+        "upsert": fresh + [(rng.choice(present), "re-inserted", CT_INSERT)],
+        "delete": fresh + [(k, "gone", CT_DELETE) for k in rng.sample(present, 3)],
+    }
+    for name, feed_rows in feeds.items():
+        t = VersionedTable(spark, str(tmp_path / name), write_partitions=2)
+        t.write(make_df(spark, base), mode="overwrite")
+        feed = spark.createDataFrame(feed_rows, FEED)
+        expected = rows(apply_change_feed(t.read(), feed, ["key"]), "key", "value")
+        v = t.merge(feed, primary_keys=["key"])
+        assert rows(t.read(), "key", "value") == expected, name
+        commit = t.commits()[-1]
+        if name == "fresh":
+            assert (commit.mode, commit.has_changes_dir) == ("append", False)
+            assert not os.path.exists(t._changes_dir(v))
+            assert t.changes_insert_only(v, v) is True
+            assert rows(t.read_changes(v, v), "key", "value", CHANGE_TYPE) == sorted(
+                feed_rows
+            )
+        else:
+            assert (commit.mode, commit.has_changes_dir) == ("merge", True), name
+    # an update row among fresh inserts still takes the rejecting path
+    t = VersionedTable(spark, str(tmp_path / "update"))
+    t.write(make_df(spark, base), mode="overwrite")
+    feed = spark.createDataFrame(fresh + [(present[0], "u", CT_UPDATE_POST)], FEED)
+    with pytest.raises(UpdatesNotSupportedError):
+        t.merge(feed, primary_keys=["key"])
+    assert t.latest_version() == 0
+
+
+def test_merge_replay_after_crash_before_watermark_applies_once(
+    spark, tmp_path, monkeypatch
+):
+    """Crash between the silver commit (a fast-path append) and
+    ``update_watermark``: the replay re-reads the same range, finds its
+    keys present, takes the rewrite path and leaves silver unchanged."""
+    from data_seedling_spark.streaming import incremental
+
+    bronze = VersionedTable(spark, str(tmp_path / "bronze"))
+    silver = VersionedTable(spark, str(tmp_path / "silver"))
+    state = VersionedTable(spark, str(tmp_path / "state"))
+
+    def run():
+        inc = incremental.read_increment(spark, bronze, state, "silver", "t")
+        incremental.write_increment(silver, inc, ["key"], state, "silver", "t")
+        return inc
+
+    bronze.write(make_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    run()
+    bronze.write(make_df(spark, [(3, "c"), (4, "d")]), mode="append")
+
+    def crash(*args):
+        raise RuntimeError("crash before the watermark advance")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "update_watermark", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            run()
+    assert silver.commits()[-1].mode == "append"
+    before = rows(silver.read(), "key", "value")
+    inc = run()
+    assert (inc.low_watermark, inc.high_watermark) == (1, 1)
+    assert silver.commits()[-1].mode == "merge"
+    assert rows(silver.read(), "key", "value") == before == [
+        (1, "a"), (2, "b"), (3, "c"), (4, "d")
+    ]
+    assert incremental.read_increment(
+        spark, bronze, state, "silver", "t"
+    ).is_empty_range
+
+
+# -- every ledger write seeds the schema a scan would infer ------------------
+
+
+def test_every_commit_kind_seeds_the_inferred_schema(spark, tmp_table_dir):
+    """Each dir a commit writes is in the schema cache as soon as the
+    commit returns, holding exactly the schema ``spark.read.parquet``
+    infers for it, so no later scan runs an inference job."""
+    import datetime as dt
+    import time
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from data_seedling_spark.tables import _DIR_SCHEMA_CACHE, _schema_key
+
+    schema = T.StructType(
+        [
+            T.StructField("key", T.LongType(), False),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("ltz", T.TimestampType()),
+            T.StructField("amount", T.DecimalType(12, 2), False),
+            T.StructField("tags", T.ArrayType(T.StringType(), False)),
+            T.StructField("attrs", T.MapType(T.StringType(), T.IntegerType(), False)),
+            T.StructField(
+                "point",
+                T.StructType(
+                    [
+                        T.StructField("x", T.DoubleType(), False),
+                        T.StructField("y", T.DoubleType()),
+                    ]
+                ),
+            ),
+        ]
+    )
+    day = dt.datetime(2024, 3, 1, 12, 30)
+    data = [
+        (k, day, day, Decimal(f"{k}.25"), ["a", str(k)], {"n": k}, (k * 1.0, None))
+        for k in range(6)
+    ]
+    t = VersionedTable(spark, tmp_table_dir, write_partitions=2)
+
+    def seeded(*dirs):
+        for d in dirs:
+            cached = _DIR_SCHEMA_CACHE.get(_schema_key(d))
+            assert cached is not None, f"{d} not seeded"
+            assert cached == spark.read.parquet(d).schema, d
+
+    def feed(keys, change):
+        return (
+            t.read().where(F.col("key") < 3)
+            .withColumn("key", F.col("key") + keys)
+            .withColumn(CHANGE_TYPE, F.lit(change))
+        )
+
+    v = t.write(spark.createDataFrame(data, schema), mode="overwrite")
+    seeded(t._version_dir(v))
+    v = t.write(t.read().withColumn("key", F.col("key") + 10), mode="append")
+    seeded(t._version_dir(v))
+    v = t.write(
+        t.read().withColumn("key", F.col("key") + 20).withColumn("note", F.lit("x")),
+        mode="append",
+        merge_schema=True,
+    )
+    seeded(t._version_dir(v))
+    v = t.write(
+        t.read().where(F.col("key") < 3).withColumn("key", F.col("key") + 30),
+        mode="append",
+        constraints={"positive": F.col("amount") > 0},
+    )
+    seeded(t._version_dir(v))
+    t.stage(
+        t.read().where(F.col("key") < 3).withColumn("key", F.col("key") + 50), "wap"
+    )
+    v = t.publish_staged("wap")
+    seeded(t._version_dir(v))
+    v = t.merge(feed(40, CT_INSERT), ["key"])
+    assert t.commits()[-1].mode == "append"
+    seeded(t._version_dir(v))
+    v = t.update(F.col("key") == 10, {"note": F.lit("updated")})
+    seeded(t._version_dir(v), t._changes_dir(v))
+    v = t.compact(sort_by=["key"])
+    seeded(t._version_dir(v))
+    # the rewrite path's tie-break orders whole rows, which a MAP column
+    # cannot be, so this merge runs on the table without one
+    v = t.write(t.read().drop("attrs"), mode="overwrite")
+    seeded(t._version_dir(v))
+    v = t.merge(feed(0, CT_DELETE), ["key"])
+    assert t.commits()[-1].mode == "merge"
+    seeded(t._version_dir(v), t._changes_dir(v))
+    v = t.write(t.read(), mode="overwrite", collect_stats=["key"])
+    seeded(t._version_dir(v))
+    # a later sidecar write moves the dir's mtime: the old entry no
+    # longer matches, so the next scan infers afresh instead of going stale
+    time.sleep(0.05)
+    t.collect_file_stats(v, ["key"])
+    assert _schema_key(t._version_dir(v)) not in _DIR_SCHEMA_CACHE
+    assert t.read().schema == spark.read.parquet(t._version_dir(v)).schema
+    assert rows(t.read(), "key") == rows(
+        spark.read.parquet(t._version_dir(v)), "key"
+    )
