@@ -45,13 +45,15 @@ process wrote runs a schema-inference job.
 Scale note: this substrate is the *local test double* for Delta/Iceberg
 — the protocol (watermark + change-feed read + idempotent merge) is
 what the engine owns; on a real lakehouse the same call sites bind to
-``spark.read.format("delta").option("readChangeFeed", ...)``. Snapshot
-reads union only the parquet files live at that version, so Catalyst
-still sees a plain parquet scan with full pushdown/pruning.
+``spark.read.format("delta").option("readChangeFeed", ...)``. A snapshot
+read is ONE multi-path parquet scan over the dirs live at that version,
+as a Delta snapshot is one scan of its live files, so Catalyst sees a
+plain parquet scan with full pushdown/pruning.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -72,7 +74,8 @@ from .merge import (
     apply_change_feed,
     strip_reserved_columns,
 )
-from ..tables import scan_parquet, seed_schema, write_parquet_dir
+from ..tables import SchemaMismatchError, _as_written, scan_parquet
+from ..tables import seed_schema, write_parquet_dir
 
 _LEDGER = "_ledger.json"
 _CLAIMS = "_claims"
@@ -80,10 +83,6 @@ _CLAIMS = "_claims"
 
 class NoSuchVersionError(ValueError):
     pass
-
-
-class SchemaMismatchError(ValueError):
-    """Append schema diverges from the table schema (S6 validation)."""
 
 
 class ConcurrentWriteConflictError(RuntimeError):
@@ -506,7 +505,8 @@ class VersionedTable:
         ``merge_schema`` the incoming frame may be a superset (new
         columns evolve the table; shared columns must still
         type-match) — Delta's ``mergeSchema`` option."""
-        incoming = {f.name: f.dataType for f in strip_reserved_columns(df).schema.fields}
+        written = _as_written(strip_reserved_columns(df).schema)  # as a scan reads it
+        incoming = {f.name: f.dataType for f in written.fields}
         current = {f.name: f.dataType for f in self.schema().fields}
         if merge_schema:
             mismatched = {
@@ -541,11 +541,10 @@ class VersionedTable:
         return commits[base:]
 
     def read(self, version: int | None = None) -> DataFrame:
-        """S1 snapshot scan (optionally time-travel to ``version``).
-
-        Unions the parquet scans of the live commits — still a plain
-        columnar scan to Catalyst (pushdown + pruning intact).
-        """
+        """S1 snapshot scan (optionally time-travel to ``version``): ONE
+        parquet scan over every live commit's dir, however many appends
+        are live. After a ``mergeSchema`` append, older commits read
+        NULLs for the added columns (Delta read semantics)."""
         as_of = self.latest_version() if version is None else version
         live = self._live_versions(as_of)
         vacuumed = [c.version for c in live if not os.path.exists(self._commit_data_dir(c))]
@@ -553,13 +552,7 @@ class VersionedTable:
             raise NoSuchVersionError(
                 f"{self.path}: snapshot {as_of} needs vacuumed version(s) {vacuumed}"
             )
-        dfs = [scan_parquet(self.spark, self._commit_data_dir(c)) for c in live]
-        # allowMissingColumns: after a mergeSchema append, pre-evolution
-        # versions surface NULLs for the added columns (Delta read
-        # semantics). Identical-schema unions are unaffected.
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-        )
+        return scan_parquet(self.spark, [self._commit_data_dir(c) for c in live])
 
     # -- file statistics / data skipping ------------------------------------
     #
@@ -582,14 +575,14 @@ class VersionedTable:
         min/max come from parquet row-group statistics aggregated per
         file. Values are stored JSON-native (numbers/strings;
         timestamps as ISO strings via ``str``), compared on read with
-        the same coercion."""
-        import glob as _glob
-
+        the same coercion. A column whose statistics pyarrow cannot
+        extract (decimal) is recorded as having none."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         stats: dict[str, dict[str, list]] = {}
         for fpath in sorted(
-            _glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
+            glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
         ):
             md = pq.ParquetFile(fpath).metadata
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -600,11 +593,16 @@ class VersionedTable:
                 mins, maxs = [], []
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(names[col]).statistics
-                    if st is None or not st.has_min_max:
+                    try:
+                        usable = st is not None and st.has_min_max
+                        if usable:
+                            mins.append(st.min)
+                            maxs.append(st.max)
+                    except pa.ArrowNotImplementedError:  # e.g. decimal
+                        usable = False
+                    if not usable:
                         mins = []
                         break
-                    mins.append(st.min)
-                    maxs.append(st.max)
                 if mins:
                     per_col[col] = [
                         _json_stat(min(mins)), _json_stat(max(maxs))
@@ -635,10 +633,9 @@ class VersionedTable:
         negatives). Files without recorded stats/blooms are kept."""
         ranges = ranges or {}
         as_of = self.latest_version() if version is None else version
-        live = self._live_versions(as_of)
-        dfs = []
-        for c in live:
-            vdir = self._commit_data_dir(c)
+        dirs = [self._commit_data_dir(c) for c in self._live_versions(as_of)]
+        kept = []
+        for vdir in dirs:
             stats = {}
             stats_path = os.path.join(vdir, "_file_stats.json")
             if os.path.exists(stats_path):
@@ -649,24 +646,17 @@ class VersionedTable:
             if equals and os.path.exists(bloom_path):
                 with open(bloom_path) as f:
                     blooms = json.load(f)
-            import glob as _glob
-
-            files = sorted(_glob.glob(os.path.join(vdir, "*.parquet")))
-            kept = [
+            kept += [
                 f
-                for f in files
+                for f in sorted(glob.glob(os.path.join(vdir, "*.parquet")))
                 if _file_may_match(stats.get(os.path.basename(f)), ranges)
                 and _bloom_may_match(
                     blooms.get(os.path.basename(f)), equals or {}
                 )
             ]
-            if kept:
-                dfs.append(scan_parquet(self.spark, vdir, files=kept))
-        if not dfs:
+        if not kept:
             return self.empty_like()
-        return reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
-        )
+        return scan_parquet(self.spark, dirs, files=kept)
 
     def _bloom_path(self, version: int) -> str:
         return os.path.join(self._version_dir(version), "_bloom_index.json")
@@ -687,13 +677,11 @@ class VersionedTable:
         positives at 10 bits/key). Bits serialize as base64 into a
         ``_bloom_index.json`` sidecar."""
         import base64
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         index: dict[str, dict] = {}
         for fpath in sorted(
-            _glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
+            glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
         ):
             pf = pq.ParquetFile(fpath)
             present = [c for c in columns if c in pf.schema_arrow.names]
@@ -864,6 +852,8 @@ class VersionedTable:
                 f"{self.path}: change range [{starting_version}, "
                 f"{ending_version}] ends before first commit {first_version}"
             )
+        # One scan per commit, unlike read(): each part carries its own
+        # _commit_version / _commit_timestamp literals.
         parts: list[DataFrame] = []
         for v in range(max(starting_version, first_version), ending_version + 1):
             commit = by_version.get(v)
@@ -938,15 +928,13 @@ class VersionedTable:
         watermarks (``_source_hi``), which ride in every commit and
         increase monotonically. Returns None when any row group's
         statistics are unusable (caller falls back to a scan)."""
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         commits = self.commits()
         if not commits:
             return None
         d = self._commit_data_dir(commits[-1])
-        files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
         if not files:
             return None
         best = None
@@ -981,8 +969,6 @@ class VersionedTable:
         Exact: parquet footers record num_rows per file. Returns None
         when a live commit's directory has no parquet files to read
         (caller falls back to a count job)."""
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
         commits = self.commits()
@@ -991,7 +977,7 @@ class VersionedTable:
         total = 0
         for c in self._live_versions(commits[-1].version):
             d = self._commit_data_dir(c)
-            files = sorted(_glob.glob(os.path.join(d, "*.parquet")))
+            files = sorted(glob.glob(os.path.join(d, "*.parquet")))
             if not files:
                 return None
             for fpath in files:

@@ -20,6 +20,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Reserved CDC metadata columns (reference ``common_types.py:79-82``).
 CHANGE_TYPE = "_change_type"
@@ -87,6 +88,20 @@ def apply_inserts(
     return target.unionByName(new_rows.select(*target.columns))
 
 
+def _row_order(df: DataFrame, columns: Sequence[str]):
+    """``columns`` of ``df`` as one orderable struct, the tie-break that
+    picks a deterministic winner among same-key rows. Spark cannot order
+    a MAP, so a map column enters as its entries sorted by key."""
+    return F.struct(
+        *[
+            F.array_sort(F.map_entries(c)).alias(c)
+            if isinstance(df.schema[c].dataType, T.MapType)
+            else F.col(c)
+            for c in columns
+        ]
+    )
+
+
 def dedupe_by_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     """One row per key, deterministic winner (greatest remaining-column
     struct — unlike ``dropDuplicates``, which keeps an arbitrary row
@@ -96,8 +111,7 @@ def dedupe_by_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     others = [c for c in df.columns if c not in keys]
     if not others:
         return df.distinct()
-    order = F.struct(*[F.col(c) for c in others]).desc()
-    w = W.partitionBy(*keys).orderBy(order)
+    w = W.partitionBy(*keys).orderBy(_row_order(df, others).desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
@@ -136,7 +150,7 @@ def apply_change_feed(
         version.desc(),
         is_insert.desc(),
         # deterministic tie-break among same-version duplicates
-        F.struct(*[F.col(c) for c in target.columns]).desc(),
+        _row_order(changes, target.columns).desc(),
     )
     last_change = (
         changes.withColumn("_rn", F.row_number().over(w))

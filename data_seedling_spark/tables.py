@@ -102,22 +102,36 @@ def seed_schema(path: str, schema: T.StructType) -> None:
         _DIR_SCHEMA_CACHE[key] = schema
 
 
+class SchemaMismatchError(ValueError):
+    """Append schema diverges from the table schema (S6 validation)."""
+
+
 def scan_parquet(
-    spark: SparkSession, path: str, files: list[str] | None = None
+    spark: SparkSession, paths: str | list[str], files: list[str] | None = None
 ) -> DataFrame:
-    """The one parquet scan: read ``path`` (or only ``files`` inside
-    it) with the schema cached for ``path``, inferring and caching it
-    on a miss."""
-    key = _schema_key(path)
-    schema = _DIR_SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        if key is not None:
-            _DIR_SCHEMA_CACHE[key] = df.schema
-        if files is None:
-            return df
-        schema = df.schema
-    return spark.read.schema(schema).parquet(*([path] if files is None else files))
+    """The one parquet scan: read every path in ``paths`` (or only
+    ``files`` inside them) as ONE multi-path scan. Its schema joins each
+    path's cached one (inferred and cached on a miss): the first path's
+    fields, then each later path's new ones, the order a
+    ``unionByName(..., allowMissingColumns=True)`` chain gives. The
+    reader fills NULLs for a column a path lacks. Paths that disagree on
+    a column's type raise :class:`SchemaMismatchError`."""
+    paths = [paths] if isinstance(paths, str) else paths
+    fields: dict[str, T.StructField] = {}
+    for path in paths:
+        schema = _DIR_SCHEMA_CACHE.get(_schema_key(path))
+        if schema is None:
+            schema = spark.read.parquet(path).schema
+            seed_schema(path, schema)
+        for f in schema.fields:
+            first = fields.setdefault(f.name, f)
+            if first.dataType != f.dataType:
+                raise SchemaMismatchError(
+                    f"{path}: {f.name!r} is {f.dataType}, {first.dataType} before"
+                )
+    return spark.read.schema(T.StructType(list(fields.values()))).parquet(
+        *(paths if files is None else files)
+    )
 
 
 def _as_written(dt: T.DataType) -> T.DataType:

@@ -255,12 +255,32 @@ def _unseeded_parquet_io(path: str) -> list[str]:
     return hits
 
 
+def _unions_in_snapshot_reads(path: str) -> list[str]:
+    """``unionByName`` calls inside ``VersionedTable.read`` /
+    ``read_pruned``, as ``line: method``."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    return [
+        f"{node.lineno}: {fn.name}"
+        for cls in tree.body
+        if isinstance(cls, ast.ClassDef) and cls.name == "VersionedTable"
+        for fn in cls.body
+        if isinstance(fn, ast.FunctionDef) and fn.name in ("read", "read_pruned")
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "unionByName"
+    ]
+
+
 def test_ledger_parquet_io_goes_through_the_seeding_helpers():
     """Every ledger and base-table parquet write goes through
     ``tables.write_parquet_dir``, which seeds the schema cache, and every
     scan through ``tables.scan_parquet``, which replays it. A write that
     skips the helper leaves its dir to a schema-inference job on every
-    first read; a bare scan infers on every call."""
+    first read; a bare scan infers on every call. A snapshot read is one
+    multi-path ``scan_parquet`` call: a union of per-commit scans adds a
+    scan per live commit."""
     pkg = os.path.join(REPO, "data_seedling_spark")
     hits = {
         rel: found
@@ -270,3 +290,5 @@ def test_ledger_parquet_io_goes_through_the_seeding_helpers():
     assert hits == {}, (
         f"parquet I/O outside tables.write_parquet_dir / scan_parquet: {hits}"
     )
+    unions = _unions_in_snapshot_reads(os.path.join(pkg, "operators/ledger.py"))
+    assert unions == [], f"snapshot read unions per-commit scans: {unions}"

@@ -5,8 +5,11 @@ Timings of these calls spread 10-20% from run to run; their Spark job
 counts repeat exactly. So each pinned call runs in its own job group,
 and the jobs the group ran (read through ``statusTracker`` once the
 listener bus is drained, no UI needed) must not exceed the call's
-budget. An extra ``.count()``, a lost broadcast or a per-commit scan
-then fails here, naming the call, instead of hiding in timing noise.
+budget. An extra ``.count()`` or a lost broadcast then fails here,
+naming the call, instead of hiding in timing noise. A per-commit scan
+adds tasks, not jobs: the ``lsh_ingest`` op also pins the tasks its
+jobs' stages completed, so a snapshot read that goes back to one scan
+per live commit fails its task budget.
 
 The warehouse budgets pin a warm registry query the same way: its
 base-table scans replay cached schemas, so an inference job per table
@@ -48,14 +51,19 @@ BUDGETS = {
         "tpch_q15_top_supplier": 8,
         "tpcds_q3_brand_year_sales": 4,
     },
+    # append, index refresh, new-vs-all candidate count; then compact()
+    "lsh_ingest": {"plain": 12, "compacting": 13},
 }
+
+#: op → {step: most tasks the step's jobs may complete}.
+TASK_BUDGETS = {"lsh_ingest": {"plain": 33, "compacting": 37}}
 
 _GROUP = "spark.jobGroup.id"
 _groups = itertools.count()
 
 
-def jobs_run(spark, call) -> int:
-    """Spark jobs ``call()`` ran, counted by a job group of its own."""
+def job_ids_run(spark, call) -> list[int]:
+    """Ids of the Spark jobs ``call()`` ran, read by a job group of its own."""
     sc = spark.sparkContext
     group = f"job_budget:{next(_groups)}"
     prior = sc.getLocalProperty(_GROUP)
@@ -65,14 +73,28 @@ def jobs_run(spark, call) -> int:
     finally:
         sc.setLocalProperty(_GROUP, prior)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def within_budget(view: str, counts: dict[str, int]) -> None:
+def jobs_run(spark, call) -> int:
+    return len(job_ids_run(spark, call))
+
+
+def tasks_completed(spark, job_ids: list[int]) -> int:
+    """Tasks completed by the stages of ``job_ids``. A skipped stage
+    completes none; past ``spark.ui.retainedStages`` the status store
+    drops skipped stages first, so a stage it no longer holds counts 0."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return sum(info.numCompletedTasks for info in infos if info is not None)
+
+
+def within_budget(view: str, counts: dict[str, int], budgets=BUDGETS, unit="jobs"):
     over = {
-        step: f"{n} jobs > budget {BUDGETS[view][step]}"
+        step: f"{n} {unit} > budget {budgets[view][step]}"
         for step, n in counts.items()
-        if n > BUDGETS[view][step]
+        if n > budgets[view][step]
     }
     assert not over, f"{view}: {over} (all counts: {counts})"
 
@@ -244,3 +266,47 @@ def test_warehouse_query_job_budget(spark, query):
     within_budget(
         "warehouse", {query: jobs_run(spark, lambda: fn(spark, SF_SMOKE).toPandas())}
     )
+
+
+def test_lsh_ingest_op_budget(spark, tmp_path):
+    """One ``lsh_ingest`` op as the benchmark times it: a document
+    batch appended to the source, the LSH index refreshed, the batch's
+    new-vs-all candidates counted; the compacting op then compacts the
+    index. The index holds several live appends when the op runs, so a
+    snapshot read of one scan per live commit shows in the tasks."""
+    from data_seedling_spark.operators.dedup import MaterializedLshIndex
+
+    src = VersionedTable(spark, str(tmp_path / "src"), write_partitions=4)
+    index = MaterializedLshIndex(
+        spark,
+        VersionedTable(spark, str(tmp_path / "idx"), write_partitions=4),
+        text_col="text",
+        id_col="id",
+        num_perm=16,
+        bands=4,
+        shingle_n=3,
+    )
+
+    def docs(ids):
+        return rows(spark, ids, ids[0]).select("id", "text")
+
+    def op(ids, compact=False):
+        version = src.write(docs(ids), mode="append")
+        index.refresh(src)
+        inc_ids = src.read_changes(version, version).select("id")
+        index.new_vs_all_candidates(inc_ids, bucket_cap=64).count()
+        if compact:
+            index.table.compact()
+
+    src.write(docs(range(40)), mode="overwrite")
+    index.refresh(src)
+    for first in (40, 60, 80):
+        op(range(first, first + 20))
+    jobs = {
+        "plain": job_ids_run(spark, lambda: op(range(100, 120))),
+        "compacting": job_ids_run(spark, lambda: op(range(120, 140), compact=True)),
+    }
+    assert index.applied_hi() == src.latest_version()
+    tasks = {step: tasks_completed(spark, ids) for step, ids in jobs.items()}
+    within_budget("lsh_ingest", {step: len(ids) for step, ids in jobs.items()})
+    within_budget("lsh_ingest", tasks, TASK_BUDGETS, "tasks")

@@ -1688,10 +1688,6 @@ def test_every_commit_kind_seeds_the_inferred_schema(spark, tmp_table_dir):
     seeded(t._version_dir(v), t._changes_dir(v))
     v = t.compact(sort_by=["key"])
     seeded(t._version_dir(v))
-    # the rewrite path's tie-break orders whole rows, which a MAP column
-    # cannot be, so this merge runs on the table without one
-    v = t.write(t.read().drop("attrs"), mode="overwrite")
-    seeded(t._version_dir(v))
     v = t.merge(feed(0, CT_DELETE), ["key"])
     assert t.commits()[-1].mode == "merge"
     seeded(t._version_dir(v), t._changes_dir(v))
@@ -1706,3 +1702,143 @@ def test_every_commit_kind_seeds_the_inferred_schema(spark, tmp_table_dir):
     assert rows(t.read(), "key") == rows(
         spark.read.parquet(t._version_dir(v)), "key"
     )
+
+
+def _union_of_commit_scans(spark, t, version=None):
+    """The snapshot as the ledger used to read it: one scan per live
+    commit, chained with ``unionByName(allowMissingColumns=True)``."""
+    from functools import reduce
+
+    as_of = t.latest_version() if version is None else version
+    scans = [
+        spark.read.parquet(t._commit_data_dir(c)) for c in t._live_versions(as_of)
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), scans)
+
+
+def _file_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+@pytest.mark.parametrize("appends", [1, 6])
+def test_snapshot_read_is_one_parquet_scan(spark, tmp_table_dir, appends):
+    """However many appends are live, a snapshot is ONE multi-path
+    parquet scan, with the rows the per-commit union gave."""
+    t = VersionedTable(spark, tmp_table_dir, write_partitions=2)
+    t.write(make_df(spark, [(k, f"v{k}") for k in range(20)]), mode="overwrite")
+    for i in range(appends):
+        batch = [(k, f"a{i}") for k in range(100 * (i + 1), 100 * (i + 1) + 15)]
+        t.write(make_df(spark, batch + [(1, "dup")]), mode="append")
+    got = t.read()
+    assert len(t._live_versions(t.latest_version())) == appends + 1
+    assert _file_scans(got) == 1
+    want = _union_of_commit_scans(spark, t)
+    assert got.columns == want.columns
+    assert rows(got, "key", "value") == rows(want, "key", "value")
+    assert got.count() == 20 + 16 * appends
+
+
+def test_merge_schema_snapshot_keeps_the_union_column_order(spark, tmp_table_dir):
+    """A mergeSchema append adds its new columns after the old ones in
+    the order the per-commit union gave, and older commits read NULLs
+    for them, all from the one scan."""
+    t = VersionedTable(spark, tmp_table_dir, write_partitions=1)
+    t.write(spark.createDataFrame([(1, "a")], "k long, s string"), mode="overwrite")
+    t.write(
+        spark.createDataFrame([(2, "b", 3)], "k long, s string, n int"),
+        mode="append",
+        merge_schema=True,
+    )
+    t.write(
+        spark.createDataFrame([(3, 4, 1.5, "c")], "k long, n int, x double, s string"),
+        mode="append",
+        merge_schema=True,
+    )
+    got = t.read()
+    want = _union_of_commit_scans(spark, t)
+    assert got.columns == want.columns == ["k", "s", "n", "x"]
+    assert got.schema == want.schema
+    assert _file_scans(got) == 1
+    assert sorted(map(tuple, got.collect())) == [
+        (1, "a", None, None),
+        (2, "b", 3, None),
+        (3, "c", 4, 1.5),
+    ]
+    # time travel reads the narrower snapshot of its own live commits
+    assert t.read(version=1).columns == ["k", "s", "n"]
+
+
+def test_scan_of_dirs_that_disagree_on_a_type_raises(spark, tmp_path):
+    from data_seedling_spark.tables import scan_parquet, write_parquet_dir
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    write_parquet_dir(spark.createDataFrame([(1, "x")], "k long, s string"), a)
+    write_parquet_dir(spark.createDataFrame([(2, 7)], "k long, s int"), b)
+    with pytest.raises(SchemaMismatchError, match="'s'"):
+        scan_parquet(spark, [a, b])
+
+
+def test_rewrite_merge_into_a_map_column_table(spark, tmp_table_dir):
+    """A deleting or upserting merge orders same-key rows by every
+    column; a MAP column enters that order as its sorted entries."""
+    schema = "k long, attrs map<string,int>, v string"
+    t = VersionedTable(spark, tmp_table_dir, write_partitions=1)
+    t.write(
+        spark.createDataFrame([(k, {"n": k, "m": -k}, f"v{k}") for k in range(5)], schema),
+        mode="overwrite",
+    )
+    feed = spark.createDataFrame(
+        [
+            (1, {"n": 1}, "v1", CT_DELETE),
+            (3, {"n": 30, "a": 1}, "new", CT_INSERT),
+            (3, {"n": 30, "b": 1}, "new", CT_INSERT),
+        ],
+        schema + ", _change_type string",
+    )
+    t.merge(feed, ["k"])
+    assert t.commits()[-1].mode == "merge"
+    got = {r["k"]: (dict(r["attrs"]), r["v"]) for r in t.read().collect()}
+    # the greater sorted-entries array wins the tie: ("b", 1) > ("a", 1)
+    assert got == {
+        0: ({"n": 0, "m": 0}, "v0"),
+        2: ({"n": 2, "m": -2}, "v2"),
+        3: ({"n": 30, "b": 1}, "new"),
+        4: ({"n": 4, "m": -4}, "v4"),
+    }
+
+
+def test_append_of_the_creating_frame_is_accepted(spark, tmp_table_dir):
+    """The table schema reads back all-nullable; an append of the very
+    frame that created the table (non-nullable nested types) matches."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("tags", T.ArrayType(T.StringType(), False)),
+            T.StructField("attrs", T.MapType(T.StringType(), T.IntegerType(), False)),
+        ]
+    )
+    df = spark.createDataFrame([(1, ["a"], {"x": 1})], schema)
+    t = VersionedTable(spark, tmp_table_dir)
+    t.write(df, mode="overwrite")
+    t.write(df, mode="append")
+    assert t.read().count() == 2
+    with pytest.raises(SchemaMismatchError):
+        t.write(df.withColumn("tags", F.lit(1)), mode="append")
+
+
+def test_stats_on_a_decimal_column_keep_every_file(spark, tmp_table_dir):
+    """pyarrow cannot extract decimal statistics: such a column records
+    no stats, the write commits and pruning keeps every file."""
+    from decimal import Decimal
+
+    t = VersionedTable(spark, tmp_table_dir, write_partitions=2)
+    df = spark.createDataFrame(
+        [(k, Decimal(f"{k}.25")) for k in range(10)], "k long, amt decimal(12,2)"
+    )
+    v = t.write(df, mode="overwrite", collect_stats=["amt"])
+    assert t.latest_version() == v == 0
+    pruned = t.read_pruned({"amt": (Decimal("100"), None)})
+    assert len(pruned.inputFiles()) == len(t.read().inputFiles())
+    assert rows(pruned, "k", "amt") == rows(df, "k", "amt")
