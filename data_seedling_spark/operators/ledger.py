@@ -23,6 +23,22 @@ Layout::
       v00000/*.parquet      # rows written by that commit
       v00003.changes/       # explicit change rows (merge/update commits)
 
+Only this module knows that layout (the ``ledger`` and
+``ledger_appends`` connectors call :func:`read_ledger`,
+:func:`commit_dir` and :func:`live_commits`):
+
+- **Commit path.** Every commit goes through ``VersionedTable._commit``:
+  claim the next version (``_claim_next``: O_EXCL claim file, blind
+  writers retried once the winner lands, ``expected_version`` guard),
+  check an append against the live schema, run the caller's write
+  step, append the ``Commit`` to ``_ledger.json`` by atomic rename,
+  and release the claim on any failure. ``MultiTableTransaction``
+  claims through ``_claim_next`` too.
+- **Snapshot rule** (:func:`live_commits`, no session needed): the
+  snapshot at ``n`` is the last non-append commit at or before ``n``
+  plus every later append, each commit's data in its ``data_dir``
+  pointer (a shallow clone's) or the table's own ``v%05d`` dir.
+
 A merge whose feed is only inserts of fresh, unique keys commits as an
 ``append``: its version dir holds just the feed's rows and it has no
 ``.changes`` dir (its change feed is those rows as inserts). Every
@@ -30,12 +46,10 @@ other merge commits the full new snapshot plus its ``.changes`` dir.
 
 The snapshot rule is also read from outside the engine: the benchmark's
 correctness twin (``perfbench/workloads.py`` ``live_commits`` /
-``read_live``) rebuilds a snapshot as the last non-append commit's dir
-plus every later append, straight from ``_ledger.json``. Insert-only
-merges keep that rule unchanged. A layout that adds files a read must
-subtract (key files, tombstones) makes that twin count deleted rows, so
-such a change lands only after the benchmark's reader learns the new
-rule.
+``read_live``) rebuilds a snapshot by the same rule, straight from
+``_ledger.json``. A layout that adds files a read must subtract (key
+files, tombstones) makes that twin count deleted rows, so such a change
+lands only after the benchmark's reader learns the new rule.
 
 Every dir a commit writes goes through ``tables.write_parquet_dir``,
 which seeds the schema cache with the schema it wrote, and every read
@@ -58,7 +72,7 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,6 +93,22 @@ from ..tables import seed_schema, write_parquet_dir
 
 _LEDGER = "_ledger.json"
 _CLAIMS = "_claims"
+#: commit modes that record their change rows in a ``.changes`` dir
+_CHANGE_MODES = ("merge", "update")
+
+
+def _dump_json(path: str, obj, indent: int | None = 1) -> None:
+    """Write ``obj`` to ``path`` atomically: a reader sees the old file
+    or the new one, never a torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The data files of one dir, sorted."""
+    return sorted(glob.glob(os.path.join(d, "*.parquet")))
 
 
 class NoSuchVersionError(ValueError):
@@ -99,7 +129,7 @@ class ConstraintViolationError(ValueError):
 @dataclass
 class Commit:
     version: int
-    mode: str  # "overwrite" | "append" | "merge"
+    mode: str  # "overwrite" | "append" | "merge" | "update"
     timestamp_ms: int
     has_changes_dir: bool = False
     #: shallow-clone pointer: when set, this commit's data files live
@@ -108,13 +138,56 @@ class Commit:
     data_dir: str | None = None
 
     def to_json(self) -> dict:
-        return {
-            "version": self.version,
-            "mode": self.mode,
-            "timestamp_ms": self.timestamp_ms,
-            "has_changes_dir": self.has_changes_dir,
-            "data_dir": self.data_dir,
-        }
+        return asdict(self)
+
+
+def read_ledger(path: str) -> list[Commit]:
+    """The commits of the table at ``path``, oldest first (``[]`` before
+    its first commit)."""
+    ledger = os.path.join(path, _LEDGER)
+    if not os.path.exists(ledger):
+        return []
+    with open(ledger) as f:
+        return [Commit(**c) for c in json.load(f)]
+
+
+def commit_dir(path: str, c: Commit) -> str:
+    """Where commit ``c`` of the table at ``path`` keeps its data: its
+    ``data_dir`` pointer (a shallow clone's), else the local version
+    dir."""
+    return c.data_dir or _local_dir(path, c.version)
+
+
+def _local_dir(path: str, version: int) -> str:
+    return os.path.join(path, f"v{version:05d}")
+
+
+def _live(commits: list[Commit], as_of: int) -> list[Commit]:
+    """The commits a snapshot of ``as_of`` reads: the last non-append
+    commit at or before it plus every later append."""
+    commits = [c for c in commits if c.version <= as_of]
+    base = max((i for i, c in enumerate(commits) if c.mode != "append"), default=0)
+    return commits[base:]
+
+
+def live_commits(path: str, version: int | None = None) -> list[tuple[Commit, str]]:
+    """The snapshot rule, without a session: each commit a read of
+    ``version`` (default: the latest) scans, with the dir holding its
+    data. Raises :class:`NoSuchVersionError` when the table has no
+    commit at or before ``version`` or a live dir was vacuumed."""
+    commits = read_ledger(path)
+    if not commits:
+        raise NoSuchVersionError(f"table {path} has no commits")
+    as_of = commits[-1].version if version is None else version
+    live = [(c, commit_dir(path, c)) for c in _live(commits, as_of)]
+    if not live:
+        raise NoSuchVersionError(f"{path}: no version <= {as_of}")
+    vacuumed = [c.version for c, d in live if not os.path.exists(d)]
+    if vacuumed:
+        raise NoSuchVersionError(
+            f"{path}: snapshot {as_of} needs vacuumed version(s) {vacuumed}"
+        )
+    return live
 
 
 class VersionedTable:
@@ -141,20 +214,12 @@ class VersionedTable:
 
     # -- ledger bookkeeping -------------------------------------------------
 
-    def _ledger_path(self) -> str:
-        return os.path.join(self.path, _LEDGER)
-
     def commits(self) -> list[Commit]:
-        if not os.path.exists(self._ledger_path()):
-            return []
-        with open(self._ledger_path()) as f:
-            return [Commit(**c) for c in json.load(f)]
+        return read_ledger(self.path)
 
     def _write_ledger(self, commits: list[Commit]) -> None:
-        tmp = self._ledger_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([c.to_json() for c in commits], f, indent=1)
-        os.replace(tmp, self._ledger_path())  # atomic commit point
+        # the atomic rename is the commit point
+        _dump_json(os.path.join(self.path, _LEDGER), [c.to_json() for c in commits])
 
     # -- optimistic concurrency ---------------------------------------------
     #
@@ -169,7 +234,9 @@ class VersionedTable:
     # only by claim holders, in version order, so its atomic-rename
     # update needs no further coordination. A writer that crashes
     # between claim and ledger write leaves a stale claim blocking its
-    # version; `clear_stale_claims` is the documented recovery.
+    # version; `clear_stale_claims` is the documented recovery. Every
+    # commit runs this protocol through `_commit`; a claim is taken
+    # only by `_claim_next`.
 
     def _claim_path(self, version: int) -> str:
         return os.path.join(self.path, _CLAIMS, f"{version:05d}.claim")
@@ -208,6 +275,67 @@ class VersionedTable:
                 return True
             time.sleep(0.05)
         return False
+
+    def _claim_next(
+        self, expected_version: int | None = None, retries: int = 0
+    ) -> tuple[list[Commit], int]:
+        """Claim the next version; return the commits it follows and the
+        claimed number. Fails with ConcurrentWriteConflictError when the
+        table is not at ``expected_version``, or when another writer
+        holds the claim and ``retries`` waits for it to land
+        (:meth:`_await_version`) are used up. Holding the claim pins the
+        returned commits: no other writer can commit past them."""
+        attempts = 0
+        while True:
+            commits = self.commits()
+            latest = commits[-1].version if commits else -1
+            if expected_version is not None and latest != expected_version:
+                raise ConcurrentWriteConflictError(
+                    f"{self.path}: expected latest version {expected_version}, "
+                    f"found {latest}; re-read and retry the read-modify-write"
+                )
+            try:
+                self._claim(latest + 1)
+                return commits, latest + 1
+            except ConcurrentWriteConflictError:
+                attempts += 1
+                if attempts > retries or not self._await_version(latest + 1):
+                    raise
+
+    def _commit(
+        self,
+        step,
+        append_of: DataFrame | None = None,
+        merge_schema: bool = False,
+        expected_version: int | None = None,
+        retries: int = 0,
+        undo=None,
+    ) -> int:
+        """The one commit path. Claim the next version
+        (:meth:`_claim_next`), check ``append_of`` — the frame an append
+        adds — against the live schema, run ``step(version)``, which
+        writes the version's files and returns the commit's mode, then
+        append the ``Commit`` to the ledger. On any failure the claim is
+        released, after ``undo(version)`` when ``step`` had completed.
+        Returns the committed version."""
+        commits, version = self._claim_next(expected_version, retries)
+        stepped = False
+        try:
+            if append_of is not None and commits:
+                self._validate_schema(append_of, merge_schema=merge_schema)
+            mode = step(version)
+            stepped = True
+            ts = int(time.time() * 1000)
+            commits.append(Commit(version, mode, ts, mode in _CHANGE_MODES))
+            self._write_ledger(commits)
+        except BaseException:
+            try:
+                if stepped and undo is not None:
+                    undo(version)
+            finally:
+                self._release_claim(version)
+            raise
+        return version
 
     def clear_stale_claims(self, older_than_s: float = 3600.0) -> list[int]:
         """Recovery for crashed writers: drop claims that never became
@@ -252,15 +380,10 @@ class VersionedTable:
         return [c.to_json() for c in self.commits()]
 
     def _version_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:05d}")
+        return _local_dir(self.path, version)
 
     def _changes_dir(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version:05d}.changes")
-
-    def _commit_data_dir(self, c: Commit) -> str:
-        """Where this commit's data files actually live: the local
-        version dir, or (shallow clone) the source table's dir."""
-        return c.data_dir or self._version_dir(c.version)
+        return self._version_dir(version) + ".changes"
 
     # -- writes ---------------------------------------------------------------
 
@@ -309,33 +432,8 @@ class VersionedTable:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
-        attempts = 0
-        while True:
-            commits = self.commits()
-            latest = commits[-1].version if commits else -1
-            if expected_version is not None and latest != expected_version:
-                raise ConcurrentWriteConflictError(
-                    f"{self.path}: expected latest version {expected_version}, "
-                    f"found {latest}; re-read and retry the read-modify-write"
-                )
-            if mode == "append" and commits:
-                self._validate_schema(df, merge_schema=merge_schema)
-            version = latest + 1
-            os.makedirs(self.path, exist_ok=True)
-            try:
-                self._claim(version)
-                break
-            except ConcurrentWriteConflictError:
-                attempts += 1
-                if (
-                    mode == "append"
-                    and expected_version is None
-                    and attempts <= max_retries
-                    and self._await_version(version)
-                ):
-                    continue
-                raise
-        try:
+
+        def step(version: int) -> str:
             vdir = self._version_dir(version)
             schema = self._write_dir(strip_reserved_columns(df), vdir)
             if constraints:
@@ -346,13 +444,16 @@ class VersionedTable:
                 self.collect_file_stats(version, collect_stats)
                 # the sidecar moved the dir's mtime: seed the new key
                 seed_schema(vdir, schema)
-            commits.append(Commit(version, mode, int(time.time() * 1000)))
-            self._write_ledger(commits)
-        except BaseException:
-            # failed or aborted writes must not block the version slot
-            self._release_claim(version)
-            raise
-        return version
+            return mode
+
+        blind_append = mode == "append" and expected_version is None
+        return self._commit(
+            step,
+            append_of=df if mode == "append" else None,
+            merge_schema=merge_schema,
+            expected_version=expected_version,
+            retries=max_retries if blind_append else 0,
+        )
 
     def _check_constraints(self, df: DataFrame, constraints: dict) -> None:
         counts = df.agg(
@@ -395,19 +496,8 @@ class VersionedTable:
         whole merge against the advanced table (each attempt
         recomputes from a fresh ``read()``, so retrying is safe) up to
         ``max_retries``."""
-        attempts = 0
-        while True:
-            commits = self.commits()
-            version = commits[-1].version + 1 if commits else 0
-            try:
-                self._claim(version)
-                break
-            except ConcurrentWriteConflictError:
-                attempts += 1
-                if attempts <= max_retries and self._await_version(version):
-                    continue
-                raise
-        try:
+
+        def step(version: int) -> str:
             target = self.read()
             # Write the feed first, then compute the snapshot FROM the
             # written parquet: the (possibly expensive) upstream feed
@@ -425,19 +515,12 @@ class VersionedTable:
                     materialised.select(*target.columns), self._version_dir(version)
                 )
                 shutil.rmtree(cdir)
-                commit = Commit(version, "append", int(time.time() * 1000))
-            else:
-                new_snapshot = apply_change_feed(target, materialised, primary_keys)
-                self._write_dir(new_snapshot, self._version_dir(version))
-                commit = Commit(
-                    version, "merge", int(time.time() * 1000), has_changes_dir=True
-                )
-            commits.append(commit)
-            self._write_ledger(commits)
-        except BaseException:
-            self._release_claim(version)
-            raise
-        return version
+                return "append"
+            new_snapshot = apply_change_feed(target, materialised, primary_keys)
+            self._write_dir(new_snapshot, self._version_dir(version))
+            return "merge"
+
+        return self._commit(step, retries=max_retries)
 
     def update(self, condition, assignments: dict) -> int:
         """S10 point UPDATE (reference ``watermark.py:125-130``): new
@@ -457,16 +540,7 @@ class VersionedTable:
         for time travel, like overwrite/merge)."""
         from .merge import CT_UPDATE_POST, CT_UPDATE_PRE
 
-        expected = self.latest_version()
-        commits = self.commits()
-        version = expected + 1
-        self._claim(version)
-        try:
-            if self.latest_version() != expected:
-                raise ConcurrentWriteConflictError(
-                    f"{self.path}: table advanced past version {expected} "
-                    "during update; re-read and retry"
-                )
+        def step(version: int) -> str:
             df = self.read()
             updated = df
             for col_name, value in assignments.items():
@@ -483,19 +557,9 @@ class VersionedTable:
                 post.withColumn(CHANGE_TYPE, F.lit(CT_UPDATE_POST))
             )
             self._write_dir(changes, self._changes_dir(version))
-            commits.append(
-                Commit(
-                    version,
-                    "update",
-                    int(time.time() * 1000),
-                    has_changes_dir=True,
-                )
-            )
-            self._write_ledger(commits)
-        except BaseException:
-            self._release_claim(version)
-            raise
-        return version
+            return "update"
+
+        return self._commit(step, expected_version=self.latest_version())
 
     def _validate_schema(self, df: DataFrame, merge_schema: bool = False) -> None:
         """Delta-style schema validation on append (reference
@@ -528,31 +592,12 @@ class VersionedTable:
 
     # -- reads ----------------------------------------------------------------
 
-    def _live_versions(self, as_of: int) -> list[Commit]:
-        """Commits contributing to the snapshot at ``as_of``: the latest
-        overwrite/merge at-or-before it, plus later appends."""
-        commits = [c for c in self.commits() if c.version <= as_of]
-        if not commits:
-            raise NoSuchVersionError(f"{self.path}: no version <= {as_of}")
-        base = 0
-        for i, c in enumerate(commits):
-            if c.mode in ("overwrite", "merge", "update"):
-                base = i
-        return commits[base:]
-
     def read(self, version: int | None = None) -> DataFrame:
         """S1 snapshot scan (optionally time-travel to ``version``): ONE
         parquet scan over every live commit's dir, however many appends
         are live. After a ``mergeSchema`` append, older commits read
         NULLs for the added columns (Delta read semantics)."""
-        as_of = self.latest_version() if version is None else version
-        live = self._live_versions(as_of)
-        vacuumed = [c.version for c in live if not os.path.exists(self._commit_data_dir(c))]
-        if vacuumed:
-            raise NoSuchVersionError(
-                f"{self.path}: snapshot {as_of} needs vacuumed version(s) {vacuumed}"
-            )
-        return scan_parquet(self.spark, [self._commit_data_dir(c) for c in live])
+        return scan_parquet(self.spark, [d for _, d in live_commits(self.path, version)])
 
     # -- file statistics / data skipping ------------------------------------
     #
@@ -581,9 +626,7 @@ class VersionedTable:
         import pyarrow.parquet as pq
 
         stats: dict[str, dict[str, list]] = {}
-        for fpath in sorted(
-            glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
-        ):
+        for fpath in _parquet_files(self._version_dir(version)):
             md = pq.ParquetFile(fpath).metadata
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
             per_col: dict[str, list] = {}
@@ -609,10 +652,7 @@ class VersionedTable:
                     ]
             if per_col:
                 stats[os.path.basename(fpath)] = per_col
-        tmp = self._stats_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(stats, f, indent=1)
-        os.replace(tmp, self._stats_path(version))
+        _dump_json(self._stats_path(version), stats)
         return stats
 
     def read_pruned(
@@ -632,8 +672,7 @@ class VersionedTable:
         only ever removes provably-dead IO (Bloom has no false
         negatives). Files without recorded stats/blooms are kept."""
         ranges = ranges or {}
-        as_of = self.latest_version() if version is None else version
-        dirs = [self._commit_data_dir(c) for c in self._live_versions(as_of)]
+        dirs = [d for _, d in live_commits(self.path, version)]
         kept = []
         for vdir in dirs:
             stats = {}
@@ -648,7 +687,7 @@ class VersionedTable:
                     blooms = json.load(f)
             kept += [
                 f
-                for f in sorted(glob.glob(os.path.join(vdir, "*.parquet")))
+                for f in _parquet_files(vdir)
                 if _file_may_match(stats.get(os.path.basename(f)), ranges)
                 and _bloom_may_match(
                     blooms.get(os.path.basename(f)), equals or {}
@@ -680,9 +719,7 @@ class VersionedTable:
         import pyarrow.parquet as pq
 
         index: dict[str, dict] = {}
-        for fpath in sorted(
-            glob.glob(os.path.join(self._version_dir(version), "*.parquet"))
-        ):
+        for fpath in _parquet_files(self._version_dir(version)):
             pf = pq.ParquetFile(fpath)
             present = [c for c in columns if c in pf.schema_arrow.names]
             if not present:
@@ -707,10 +744,7 @@ class VersionedTable:
                 }
             if per_col:
                 index[os.path.basename(fpath)] = per_col
-        tmp = self._bloom_path(version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(index, f)
-        os.replace(tmp, self._bloom_path(version))
+        _dump_json(self._bloom_path(version), index, indent=None)
         return index
 
     def version_at_timestamp(self, timestamp_ms: int) -> int:
@@ -769,21 +803,17 @@ class VersionedTable:
           commit — there is no prior snapshot on the clone to diff
           against), which is the correct net effect of a snapshot.
         """
-        as_of = self.latest_version() if version is None else version
-        live = self._live_versions(as_of)
+        cloned = [
+            Commit(
+                c.version,
+                "overwrite" if i == 0 else "append",
+                c.timestamp_ms,
+                data_dir=os.path.abspath(d),
+            )
+            for i, (c, d) in enumerate(live_commits(self.path, version))
+        ]
         os.makedirs(dest_path, exist_ok=True)
         dest = VersionedTable(self.spark, dest_path, self.write_partitions)
-        cloned = []
-        for i, c in enumerate(live):
-            cloned.append(
-                Commit(
-                    version=c.version,
-                    mode="overwrite" if i == 0 else "append",
-                    timestamp_ms=c.timestamp_ms,
-                    has_changes_dir=False,
-                    data_dir=os.path.abspath(self._commit_data_dir(c)),
-                )
-            )
         dest._write_ledger(cloned)
         return dest
 
@@ -807,10 +837,7 @@ class VersionedTable:
             raise NoSuchVersionError(f"{self.path}: no version {v} to tag")
         tags = self.tags()
         tags[name] = v
-        tmp = self._tags_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(tags, f, indent=1)
-        os.replace(tmp, self._tags_path())
+        _dump_json(self._tags_path(), tags)
         return v
 
     def read_tag(self, name: str) -> DataFrame:
@@ -868,7 +895,7 @@ class VersionedTable:
                     )
                 )
                 continue
-            rows = scan_parquet(self.spark, self._commit_data_dir(commit))
+            rows = scan_parquet(self.spark, commit_dir(self.path, commit))
             if commit.mode == "overwrite" and v > first_version:
                 prev = self.read(version=v - 1)
                 parts.append(
@@ -933,8 +960,7 @@ class VersionedTable:
         commits = self.commits()
         if not commits:
             return None
-        d = self._commit_data_dir(commits[-1])
-        files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+        files = _parquet_files(commit_dir(self.path, commits[-1]))
         if not files:
             return None
         best = None
@@ -971,13 +997,11 @@ class VersionedTable:
         (caller falls back to a count job)."""
         import pyarrow.parquet as pq
 
-        commits = self.commits()
-        if not commits:
+        if not self.exists():
             return None
         total = 0
-        for c in self._live_versions(commits[-1].version):
-            d = self._commit_data_dir(c)
-            files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+        for _, d in live_commits(self.path):
+            files = _parquet_files(d)
             if not files:
                 return None
             for fpath in files:
@@ -1014,7 +1038,7 @@ class VersionedTable:
         retained = commits[-max(retain_last_versions, 1):]
         live: set[int] = set()
         for c in retained:
-            live.update(x.version for x in self._live_versions(c.version))
+            live.update(x.version for x in _live(commits, c.version))
         removed: list[int] = []
         for c in commits:
             target = self._version_dir(c.version)
@@ -1161,32 +1185,21 @@ class VersionedTable:
             )
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
-        commits = self.commits()
-        version = (commits[-1].version if commits else -1) + 1
-        self._claim(version)
-        try:
+
+        def step(version: int) -> str:
             os.rename(sdir, self._version_dir(version))
-        except BaseException:
-            self._release_claim(version)
-            raise
-        seed_schema(self._version_dir(version), staged.schema)
-        try:
-            commits.append(Commit(version, mode, int(time.time() * 1000)))
-            self._write_ledger(commits)
-        except BaseException:
-            # The rename already consumed the staging dir; without a
-            # rollback a failed ledger write would wedge the publish —
-            # the claim is released but the version dir is populated,
-            # so a retry of the same staging id dies on rename-onto-
-            # existing with its staged data gone (r8 ADVICE). Move the
-            # data back BEFORE releasing the claim so the staged write
-            # survives and publish_staged(staging_id) stays retryable.
-            try:
-                os.rename(self._version_dir(version), sdir)
-            finally:
-                self._release_claim(version)
-            raise
-        return version
+            seed_schema(self._version_dir(version), staged.schema)
+            return mode
+
+        # The rename consumes the staging dir: a failed ledger write
+        # moves the data back before the claim is released, so the
+        # staged write survives and publish_staged(staging_id) stays
+        # retryable.
+        return self._commit(
+            step,
+            append_of=staged if mode == "append" else None,
+            undo=lambda version: os.rename(self._version_dir(version), sdir),
+        )
 
     def empty_like_from(self, df: DataFrame) -> DataFrame:
         """Empty frame with ``df``'s schema (first-publish audit
@@ -1221,8 +1234,8 @@ class VersionedTable:
         if os.path.isdir(dest):
             raise ValueError(f"branch {name!r} already exists at {dest}")
         br = self.clone(dest, version=base)
-        with open(os.path.join(dest, "_branch_meta.json"), "w") as fh:
-            json.dump({"base_version": base, "source": self.path}, fh)
+        meta = {"base_version": base, "source": self.path}
+        _dump_json(os.path.join(dest, "_branch_meta.json"), meta, indent=None)
         return br
 
     def branch(self, name: str) -> "VersionedTable":
@@ -1450,13 +1463,10 @@ class MultiTableTransaction:
         entries = []
         try:
             for table, df, mode in staged:
-                commits = table.commits()
+                commits, version = table._claim_next()
+                claimed.append((table, version))
                 if mode == "append" and commits:
                     table._validate_schema(df)
-                version = (commits[-1].version if commits else -1) + 1
-                os.makedirs(table.path, exist_ok=True)
-                table._claim(version)
-                claimed.append((table, version))
                 entries.append(
                     {
                         "path": os.path.abspath(table.path),
@@ -1469,11 +1479,10 @@ class MultiTableTransaction:
                 table._write_dir(
                     strip_reserved_columns(df), table._version_dir(e["version"])
                 )
-            prepared = self._manifest_path(txn_id, "prepared")
-            tmp = prepared + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"txn_id": txn_id, "entries": entries}, f, indent=1)
-            os.replace(tmp, prepared)
+            _dump_json(
+                self._manifest_path(txn_id, "prepared"),
+                {"txn_id": txn_id, "entries": entries},
+            )
         except BaseException:
             for table, version in claimed:
                 table._release_claim(version)

@@ -27,6 +27,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from .operators.ledger import commit_dir, read_ledger
+
 _SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
@@ -94,20 +96,9 @@ def register_sources(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _ledger_commits(path: str):
-    import json
-    import os
-
-    ledger = os.path.join(path, "_ledger.json")
-    if not os.path.exists(ledger):
-        return []
-    with open(ledger) as f:
-        return json.load(f)
-
-
 class _VersionPartition(InputPartition):
-    def __init__(self, path: str, version: int):
-        self.path = path
+    def __init__(self, data_dir: str, version: int):
+        self.data_dir = data_dir
         self.version = version
 
 
@@ -118,9 +109,10 @@ class LedgerAppendsStreamReader(DataSourceStreamReader):
     partition per new version; executors read that version's parquet
     via pyarrow and tag the CDC metadata columns.
 
-    Append-only by design: an overwrite/merge commit raises instead of
-    silently emitting wrong change semantics (full CDC replay is the
-    batch ``read_changes`` path)."""
+    Append-only by design: a commit other than an append or the
+    table's first (its creation, also on a clone or branch) raises
+    instead of silently emitting wrong change semantics (full CDC
+    replay is the batch ``read_changes`` path)."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -129,32 +121,29 @@ class LedgerAppendsStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self):
-        commits = _ledger_commits(self.path)
-        return {"version": commits[-1]["version"] if commits else -1}
+        commits = read_ledger(self.path)
+        return {"version": commits[-1].version if commits else -1}
 
     def partitions(self, start, end):
-        lo, hi = start["version"] + 1, end["version"]
-        commits = {c["version"]: c for c in _ledger_commits(self.path)}
+        commits = read_ledger(self.path)
         parts = []
-        for v in range(lo, hi + 1):
-            mode = commits[v]["mode"]
-            if mode not in ("append", "overwrite") or (mode == "overwrite" and v > 0):
+        for c in commits:
+            if not start["version"] < c.version <= end["version"]:
+                continue
+            if c.mode != "append" and c is not commits[0]:
                 raise ValueError(
-                    f"ledger_appends is an append-only stream; version {v} "
-                    f"is a {mode} commit — consume it via read_changes()"
+                    f"ledger_appends is an append-only stream; version "
+                    f"{c.version} is a {c.mode} commit — consume it via "
+                    "read_changes()"
                 )
-            parts.append(_VersionPartition(self.path, v))
+            parts.append(_VersionPartition(commit_dir(self.path, c), c.version))
         return parts
 
     def read(self, partition):
-        import os
-
         import pyarrow.dataset as ds
 
-        vdir = os.path.join(partition.path, f"v{partition.version:05d}")
-        table = ds.dataset(vdir, format="parquet").to_table()
-        cols = table.to_pylist()
-        for row in cols:
+        table = ds.dataset(partition.data_dir, format="parquet").to_table()
+        for row in table.to_pylist():
             yield tuple(row.values()) + (partition.version,)
 
     def commit(self, end):
@@ -167,17 +156,15 @@ class LedgerAppendsDataSource(DataSource):
         return "ledger_appends"
 
     def schema(self):
-        import os
-
         import pyarrow.dataset as ds
         from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import LongType, StructField
 
-        commits = _ledger_commits(self.options["path"])
+        commits = read_ledger(self.options["path"])
         if not commits:
             raise ValueError(f"no commits at {self.options['path']}")
-        v0 = os.path.join(self.options["path"], f"v{commits[0]['version']:05d}")
-        base = from_arrow_schema(ds.dataset(v0, format="parquet").schema)
+        first = commit_dir(self.options["path"], commits[0])
+        base = from_arrow_schema(ds.dataset(first, format="parquet").schema)
         return StructType(base.fields + [StructField("_commit_version", LongType())])
 
     def streamReader(self, schema):

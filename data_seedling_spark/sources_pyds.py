@@ -2,9 +2,9 @@
 user-defined data source API, ``pyspark.sql.datasource``).
 
 Everywhere else the engine reads ledger tables through
-``VersionedTable.read()`` (a driver-side union of parquet scans —
-fastest, fully native). This connector exposes the SAME table as a
-first-class format string::
+``VersionedTable.read()`` (one multi-path parquet scan — fastest, fully
+native). This connector exposes the SAME table as a first-class format
+string::
 
     spark.dataSource.register(LedgerDataSource)
     spark.read.format("ledger").option("path", p).load()
@@ -13,11 +13,12 @@ first-class format string::
 which is what SQL-only consumers and catalog bindings need (``CREATE
 TABLE ... USING ledger`` shapes). It demonstrates the connector
 contract end-to-end: schema discovery without a session (pyarrow
-footer read), snapshot resolution from the commit ledger (time travel
-via the ``version`` option), and one ``InputPartition`` per parquet
-file so a 10k-file snapshot fans out across the cluster. ``read``
-yields Arrow record batches (the vectorized path — rows never
-materialize as Python tuples).
+footer read), snapshot resolution by the ledger's own session-free rule
+(``operators.ledger.live_commits``; time travel via the ``version``
+option), and one ``InputPartition`` per parquet file so a 10k-file
+snapshot fans out across the cluster. ``read`` yields Arrow record
+batches (the vectorized path — rows never materialize as Python
+tuples).
 
 Trade-off, stated plainly: batches cross the JVM↔Python boundary once
 (Arrow IPC), so the native ``VersionedTable.read()`` path remains the
@@ -30,10 +31,9 @@ format-string addressability.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .operators.ledger import _parquet_files, live_commits
 
 
 class _FilePartition(InputPartition):
@@ -43,31 +43,10 @@ class _FilePartition(InputPartition):
 
 
 def _live_parquet_files(path: str, version: int | None) -> list[str]:
-    """Replicates ``VersionedTable._live_versions`` on the raw ledger
-    JSON (no SparkSession on this code path): latest overwrite/merge
-    at-or-before ``version`` plus later appends, expanded to files."""
-    ledger = os.path.join(path, "_ledger.json")
-    with open(ledger) as f:
-        commits = json.load(f)
-    as_of = commits[-1]["version"] if version is None else int(version)
-    commits = [c for c in commits if c["version"] <= as_of]
-    if not commits:
-        raise ValueError(f"{path}: no version <= {as_of}")
-    base = 0
-    for i, c in enumerate(commits):
-        if c["mode"] in ("overwrite", "merge"):
-            base = i
-    files: list[str] = []
-    for c in commits[base:]:
-        vdir = os.path.join(path, f"v{c['version']:05d}")
-        if not os.path.isdir(vdir):
-            raise ValueError(f"{path}: version {c['version']} was vacuumed")
-        files.extend(
-            os.path.join(vdir, f)
-            for f in sorted(os.listdir(vdir))
-            if f.endswith(".parquet")
-        )
-    return files
+    """The files of the snapshot at ``version`` (default: the latest)."""
+    if version is not None:
+        version = int(version)
+    return [f for _, d in live_commits(path, version) for f in _parquet_files(d)]
 
 
 class LedgerReader(DataSourceReader):

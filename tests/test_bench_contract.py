@@ -292,3 +292,64 @@ def test_ledger_parquet_io_goes_through_the_seeding_helpers():
     )
     unions = _unions_in_snapshot_reads(os.path.join(pkg, "operators/ledger.py"))
     assert unions == [], f"snapshot read unions per-commit scans: {unions}"
+
+
+#: Where a ledger claim or ledger-file write may happen: the commit path
+#: (``_claim_next`` / ``_commit``), ``clone`` (which creates a ledger)
+#: and the transaction's roll-forward (``_apply_entry``).
+_LEDGER_WRITERS = ("_claim_next", "_commit", "clone", "_apply_entry")
+
+
+def _ledger_protocol_leaks(package: str) -> list[str]:
+    """``_claim(`` / ``_write_ledger(`` calls outside
+    ``_LEDGER_WRITERS``, and ``_ledger.json`` paths or ``v{…:05d}`` dir
+    names outside ``operators/ledger.py``, as ``file:line: what``."""
+    import ast
+    import re
+
+    layout = re.compile(r"_ledger\.json|v\{[^{}]*:05d\}|v%05d")
+    hits = []
+
+    def calls(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                calls(child, child.name, rel)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("_claim", "_write_ledger")
+                and fn not in _LEDGER_WRITERS
+            ):
+                hits.append(f"{rel}:{child.lineno}: {child.func.attr} in {fn}")
+            calls(child, fn, rel)
+
+    for root, _, files in os.walk(package):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, package)
+            with open(path) as f:
+                src = f.read()
+            calls(ast.parse(src, path), None, rel)
+            if rel != os.path.join("operators", "ledger.py"):
+                hits += [
+                    f"{rel}:{src.count(chr(10), 0, m.start()) + 1}: {m.group()}"
+                    for m in layout.finditer(src)
+                ]
+    return sorted(hits)
+
+
+def test_ledger_protocol_has_one_owner():
+    """Every commit claims its version and appends its ledger entry
+    through ``VersionedTable._commit``, and only ``operators/ledger.py``
+    knows the on-disk layout: a hand-rolled claim can skip the schema
+    check or leak the claim on failure, and a connector that names
+    version dirs itself drifts from the snapshot rule."""
+    hits = _ledger_protocol_leaks(os.path.join(REPO, "data_seedling_spark"))
+    assert hits == [], (
+        f"ledger protocol outside its owner: {hits}; commit through "
+        "VersionedTable._commit and resolve snapshots with "
+        "operators.ledger.live_commits / commit_dir"
+    )

@@ -240,3 +240,26 @@ def test_ledger_python_datasource_snapshot_and_time_travel(spark, tmp_path):
         .load()
     )
     assert v0.count() == t.read(0).count()
+
+    def same_rows(path, table, version=None):
+        reader = spark.read.format("ledger").option("path", path)
+        if version is not None:
+            reader = reader.option("version", version)
+        got = sorted(tuple(r) for r in reader.load().collect())
+        assert got == sorted(tuple(r) for r in table.read(version).collect())
+
+    # an update commit is a snapshot base, like overwrite and merge
+    t.update(F.col("o_orderkey") < 100, {"o_orderstatus": F.lit("Z")})
+    same_rows(str(tmp_path / "t"), t)
+    same_rows(str(tmp_path / "t"), t, version=1)
+    # a rewrite merge
+    delete = t.read().where(F.col("o_orderkey") < 50).withColumn(
+        "_change_type", F.lit("delete")
+    )
+    t.merge(delete, ["o_orderkey"])
+    assert t.commits()[-1].mode == "merge"
+    same_rows(str(tmp_path / "t"), t)
+    # a shallow clone reads its commits' data in the source's dirs
+    clone = t.clone(str(tmp_path / "clone"), version=1)
+    same_rows(str(tmp_path / "clone"), clone)
+    same_rows(str(tmp_path / "clone"), clone, version=1)

@@ -15,6 +15,7 @@ from data_seedling_spark.operators.ledger import (
     NoSuchVersionError,
     SchemaMismatchError,
     VersionedTable,
+    live_commits,
 )
 from data_seedling_spark.operators.merge import (
     CHANGE_TYPE,
@@ -1338,6 +1339,23 @@ def test_wap_publish_retryable_after_ledger_write_failure(spark, tmp_table_dir, 
         t.read_staged("crashy")
 
 
+def test_wap_publish_rejects_an_append_the_table_outgrew(spark, tmp_table_dir):
+    """The schema check runs again at publish, under the claim: a stage
+    that matched when it was written but not after an overwrite changed
+    a column's type must not commit as an append (every later read
+    would fail on the mixed types). The table stays put and the stage
+    stays readable."""
+    t = VersionedTable(spark, tmp_table_dir)
+    t.write(spark.createDataFrame([(1, "a")], "k long, v string"), mode="overwrite")
+    t.stage(spark.createDataFrame([(2, "b"), (3, "c")], "k long, v string"), "old")
+    t.write(spark.createDataFrame([(1, 1.5)], "k long, v double"), mode="overwrite")
+    with pytest.raises(SchemaMismatchError):
+        t.publish_staged("old")
+    assert t.latest_version() == 1
+    assert rows(t.read(), "k", "v") == [(1, 1.5)]
+    assert rows(t.read_staged("old"), "k", "v") == [(2, "b"), (3, "c")]
+
+
 def test_ledger_torture_branch_wap_update_interleaved(spark, tmp_table_dir):
     """Serializability torture (r8 VERDICT #4): three writer sessions
     — a branch-merge, a WAP stage/publish, and a watermark-style point
@@ -1709,10 +1727,7 @@ def _union_of_commit_scans(spark, t, version=None):
     commit, chained with ``unionByName(allowMissingColumns=True)``."""
     from functools import reduce
 
-    as_of = t.latest_version() if version is None else version
-    scans = [
-        spark.read.parquet(t._commit_data_dir(c)) for c in t._live_versions(as_of)
-    ]
+    scans = [spark.read.parquet(d) for _, d in live_commits(t.path, version)]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), scans)
 
 
@@ -1730,7 +1745,7 @@ def test_snapshot_read_is_one_parquet_scan(spark, tmp_table_dir, appends):
         batch = [(k, f"a{i}") for k in range(100 * (i + 1), 100 * (i + 1) + 15)]
         t.write(make_df(spark, batch + [(1, "dup")]), mode="append")
     got = t.read()
-    assert len(t._live_versions(t.latest_version())) == appends + 1
+    assert len(live_commits(t.path)) == appends + 1
     assert _file_scans(got) == 1
     want = _union_of_commit_scans(spark, t)
     assert got.columns == want.columns

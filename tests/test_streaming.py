@@ -251,6 +251,38 @@ def test_ledger_appends_streaming_source_exactly_once(spark, tmp_path):
         drain()
 
 
+def test_ledger_appends_streams_a_clone(spark, tmp_path):
+    """A clone's first commit is its creation, whatever its version
+    number, and its data lives in the source's dirs: the stream
+    delivers the cloned snapshot, then the clone's own appends."""
+    from pyspark.sql import Row
+
+    from data_seedling_spark.operators.ledger import VersionedTable
+    from data_seedling_spark.sources import register_streaming_sources
+
+    register_streaming_sources(spark)
+    src = VersionedTable(spark, str(tmp_path / "src"), write_partitions=1)
+    src.write(spark.createDataFrame([Row(k=1, v="a")]), mode="overwrite")  # v0
+    src.write(spark.createDataFrame([Row(k=2, v="b")]), mode="overwrite")  # v1
+    clone = src.clone(str(tmp_path / "clone"))
+    clone.write(spark.createDataFrame([Row(k=3, v="c")]), mode="append")  # v2
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("ledger_appends")
+        .option("path", clone.path)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    q.stop()
+    got = {(r["k"], r["v"], r["_commit_version"]) for r in spark.read.parquet(out).collect()}
+    assert got == {(2, "b", 1), (3, "c", 2)}
+
+
 def test_ntz_event_time_is_watermark_compatible(spark):
     """Spark 4 infers parquet timestamps as TIMESTAMP_NTZ, which
     withWatermark rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). Every
