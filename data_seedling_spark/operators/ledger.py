@@ -25,15 +25,15 @@ Layout::
 
 Only this module knows that layout (the ``ledger`` and
 ``ledger_appends`` connectors call :func:`read_ledger`,
-:func:`commit_dir` and :func:`live_commits`):
+:func:`commit_dir` and :func:`live_files`):
 
 - **Commit path.** Every commit goes through ``VersionedTable._commit``:
-  claim the next version (``_claim_next``: O_EXCL claim file, blind
-  writers retried once the winner lands, ``expected_version`` guard),
-  check an append against the live schema, run the caller's write
-  step, append the ``Commit`` to ``_ledger.json`` by atomic rename,
-  and release the claim on any failure. ``MultiTableTransaction``
-  claims through ``_claim_next`` too.
+  claim the next version (``_claim_next``: O_EXCL claim file, the
+  ledger re-read under the claim, blind writers retried once the
+  winner lands, ``expected_version`` guard, an append checked against
+  the live schema), run the caller's write step, append the ``Commit``
+  to ``_ledger.json`` by atomic rename, and release the claim on any
+  failure. ``MultiTableTransaction`` claims through ``_claim_next`` too.
 - **Snapshot rule** (:func:`live_commits`, no session needed): the
   snapshot at ``n`` is the last non-append commit at or before ``n``
   plus every later append, each commit's data in its ``data_dir``
@@ -190,6 +190,11 @@ def live_commits(path: str, version: int | None = None) -> list[tuple[Commit, st
     return live
 
 
+def live_files(path: str, version: int | None = None) -> list[tuple[str, list[str]]]:
+    """:func:`live_commits` as ``(dir, data files)`` per live commit."""
+    return [(d, _parquet_files(d)) for _, d in live_commits(path, version)]
+
+
 class VersionedTable:
     """A parquet table with Delta-like versioning + change feed."""
 
@@ -277,14 +282,20 @@ class VersionedTable:
         return False
 
     def _claim_next(
-        self, expected_version: int | None = None, retries: int = 0
+        self,
+        expected_version: int | None = None,
+        retries: int = 0,
+        append_of: DataFrame | None = None,
+        merge_schema: bool = False,
     ) -> tuple[list[Commit], int]:
         """Claim the next version; return the commits it follows and the
         claimed number. Fails with ConcurrentWriteConflictError when the
         table is not at ``expected_version``, or when another writer
-        holds the claim and ``retries`` waits for it to land
-        (:meth:`_await_version`) are used up. Holding the claim pins the
-        returned commits: no other writer can commit past them."""
+        claimed or committed the version first and ``retries`` waits for
+        it to land (:meth:`_await_version`) are used up. Holding the claim
+        pins the returned commits: no other writer can commit past them.
+        ``append_of``, the frame an append adds, is checked against the
+        live schema under the claim."""
         attempts = 0
         while True:
             commits = self.commits()
@@ -296,33 +307,37 @@ class VersionedTable:
                 )
             try:
                 self._claim(latest + 1)
-                return commits, latest + 1
+                # a writer that committed latest+1 since the read above has
+                # released its claim: re-read under ours before trusting it
+                if self.commits()[-1:] != commits[-1:]:
+                    self._release_claim(latest + 1)
+                    raise ConcurrentWriteConflictError(
+                        f"{self.path}: version {latest + 1} was committed "
+                        "concurrently; re-read and retry"
+                    )
             except ConcurrentWriteConflictError:
                 attempts += 1
                 if attempts > retries or not self._await_version(latest + 1):
                     raise
+                continue
+            try:
+                if append_of is not None and commits:
+                    self._validate_schema(append_of, merge_schema=merge_schema)
+            except BaseException:
+                self._release_claim(latest + 1)
+                raise
+            return commits, latest + 1
 
-    def _commit(
-        self,
-        step,
-        append_of: DataFrame | None = None,
-        merge_schema: bool = False,
-        expected_version: int | None = None,
-        retries: int = 0,
-        undo=None,
-    ) -> int:
-        """The one commit path. Claim the next version
-        (:meth:`_claim_next`), check ``append_of`` — the frame an append
-        adds — against the live schema, run ``step(version)``, which
-        writes the version's files and returns the commit's mode, then
-        append the ``Commit`` to the ledger. On any failure the claim is
-        released, after ``undo(version)`` when ``step`` had completed.
-        Returns the committed version."""
-        commits, version = self._claim_next(expected_version, retries)
+    def _commit(self, step, undo=None, **claim) -> int:
+        """The one commit path. Claim the next version (:meth:`_claim_next`
+        with ``claim``), run ``step(version)``, which writes the version's
+        files and returns the commit's mode, then append the ``Commit`` to
+        the ledger. On any failure the claim is released, after
+        ``undo(version)`` when ``step`` had completed. Returns the
+        committed version."""
+        commits, version = self._claim_next(**claim)
         stepped = False
         try:
-            if append_of is not None and commits:
-                self._validate_schema(append_of, merge_schema=merge_schema)
             mode = step(version)
             stepped = True
             ts = int(time.time() * 1000)
@@ -672,9 +687,9 @@ class VersionedTable:
         only ever removes provably-dead IO (Bloom has no false
         negatives). Files without recorded stats/blooms are kept."""
         ranges = ranges or {}
-        dirs = [d for _, d in live_commits(self.path, version)]
+        live = live_files(self.path, version)
         kept = []
-        for vdir in dirs:
+        for vdir, files in live:
             stats = {}
             stats_path = os.path.join(vdir, "_file_stats.json")
             if os.path.exists(stats_path):
@@ -687,7 +702,7 @@ class VersionedTable:
                     blooms = json.load(f)
             kept += [
                 f
-                for f in _parquet_files(vdir)
+                for f in files
                 if _file_may_match(stats.get(os.path.basename(f)), ranges)
                 and _bloom_may_match(
                     blooms.get(os.path.basename(f)), equals or {}
@@ -695,7 +710,7 @@ class VersionedTable:
             ]
         if not kept:
             return self.empty_like()
-        return scan_parquet(self.spark, dirs, files=kept)
+        return scan_parquet(self.spark, [d for d, _ in live], files=kept)
 
     def _bloom_path(self, version: int) -> str:
         return os.path.join(self._version_dir(version), "_bloom_index.json")
@@ -997,11 +1012,12 @@ class VersionedTable:
         (caller falls back to a count job)."""
         import pyarrow.parquet as pq
 
-        if not self.exists():
+        try:
+            live = live_files(self.path)
+        except NoSuchVersionError:
             return None
         total = 0
-        for _, d in live_commits(self.path):
-            files = _parquet_files(d)
+        for _, files in live:
             if not files:
                 return None
             for fpath in files:
@@ -1463,10 +1479,10 @@ class MultiTableTransaction:
         entries = []
         try:
             for table, df, mode in staged:
-                commits, version = table._claim_next()
+                _, version = table._claim_next(
+                    append_of=df if mode == "append" else None
+                )
                 claimed.append((table, version))
-                if mode == "append" and commits:
-                    table._validate_schema(df)
                 entries.append(
                     {
                         "path": os.path.abspath(table.path),

@@ -14,7 +14,7 @@ which is what SQL-only consumers and catalog bindings need (``CREATE
 TABLE ... USING ledger`` shapes). It demonstrates the connector
 contract end-to-end: schema discovery without a session (pyarrow
 footer read), snapshot resolution by the ledger's own session-free rule
-(``operators.ledger.live_commits``; time travel via the ``version``
+(``operators.ledger.live_files``; time travel via the ``version``
 option), and one ``InputPartition`` per parquet file so a 10k-file
 snapshot fans out across the cluster. ``read`` yields Arrow record
 batches (the vectorized path — rows never materialize as Python
@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .operators.ledger import _parquet_files, live_commits
+from .operators.ledger import live_files
 
 
 class _FilePartition(InputPartition):
@@ -46,7 +46,7 @@ def _live_parquet_files(path: str, version: int | None) -> list[str]:
     """The files of the snapshot at ``version`` (default: the latest)."""
     if version is not None:
         version = int(version)
-    return [f for _, d in live_commits(path, version) for f in _parquet_files(d)]
+    return [f for _, files in live_files(path, version) for f in files]
 
 
 class LedgerReader(DataSourceReader):

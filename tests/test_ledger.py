@@ -1356,6 +1356,50 @@ def test_wap_publish_rejects_an_append_the_table_outgrew(spark, tmp_table_dir):
     assert rows(t.read_staged("old"), "k", "v") == [(2, "b"), (3, "c")]
 
 
+def test_update_conflicts_with_a_commit_that_landed_before_its_claim(
+    spark, tmp_path, monkeypatch
+):
+    """A transaction that commits N+1 after ``update`` read the ledger
+    at N, but before ``update`` claims N+1, has already released its
+    claim, so ``update`` wins the claim. The ledger re-read under the
+    claim must turn that into a conflict; otherwise the update's ledger
+    write, built from the stale list, drops the transaction's commit."""
+    from data_seedling_spark.operators.ledger import (
+        ConcurrentWriteConflictError,
+        MultiTableTransaction,
+    )
+
+    path = str(tmp_path / "t")
+    schema = "k long, v string"
+    t = VersionedTable(spark, path, write_partitions=1)
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], schema), mode="overwrite")
+    real_claim = VersionedTable._claim
+    raced = []
+
+    def claim_after_a_txn_commits(self, version):
+        if not raced:
+            raced.append(version)
+            txn = MultiTableTransaction(spark, str(tmp_path / "txn"))
+            txn.stage(
+                VersionedTable(spark, path), spark.createDataFrame([(3, "c")], schema)
+            )
+            txn.commit()
+        real_claim(self, version)
+
+    monkeypatch.setattr(VersionedTable, "_claim", claim_after_a_txn_commits)
+    with pytest.raises(ConcurrentWriteConflictError, match="committed concurrently"):
+        t.update(F.col("k") == 1, {"v": F.lit("z")})
+    assert raced == [1]
+    assert [(c["version"], c["mode"]) for c in t.history()] == [
+        (0, "overwrite"),
+        (1, "append"),
+    ]
+    assert rows(t.read(), "k", "v") == [(1, "a"), (2, "b"), (3, "c")]
+    # the losing claim was released: the retried update lands on 2
+    assert t.update(F.col("k") == 1, {"v": F.lit("z")}) == 2
+    assert rows(t.read(), "k", "v") == [(1, "z"), (2, "b"), (3, "c")]
+
+
 def test_ledger_torture_branch_wap_update_interleaved(spark, tmp_table_dir):
     """Serializability torture (r8 VERDICT #4): three writer sessions
     — a branch-merge, a WAP stage/publish, and a watermark-style point
